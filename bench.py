@@ -21,6 +21,7 @@ from hebrew_tutor_data_pipeline_spark.plans import (  # noqa: E402
     CATALOG,
     REGISTRATION_ORDER,
 )
+from hebrew_tutor_data_pipeline_spark.scope import QueryScope  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -208,85 +209,73 @@ def main() -> int:
     # Warm the Structured Streaming micro-batch machinery: the first
     # stream of a session pays the py4j foreachBatch callback server,
     # StreamExecution planning and checkpoint-commit first-touch. One
-    # availableNow batch over a 1-row scratch parquet, then the scratch
-    # is deleted — no catalog input is pre-read.
+    # availableNow batch over a 1-row scratch parquet — no catalog input
+    # is pre-read. A local scope owns the scratch and the conf the
+    # stateful warmup changes, so a warmup that raises leaks neither
+    # into the measured run.
     try:
-        import shutil
-        import tempfile
-
-        warm_dir = tempfile.mkdtemp(prefix="htdp_bench_warm_")
-        spark.range(1).write.mode("overwrite").parquet(f"{warm_dir}/in")
-        wq = (
-            spark.readStream.schema("id long")
-            .parquet(f"{warm_dir}/in")
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda df, bid: df.write.format("noop").mode("overwrite").save())
-            .option("checkpointLocation", f"{warm_dir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        wq.awaitTermination(120)
-        wq.stop()
-        # The PYTHON stateful path (applyInPandasWithState) spins up
-        # separately from the stateless micro-batch machinery warmed
-        # above: state-server channel, Arrow state serde, grouped-state
-        # Python runner. Measured r14: the first stateful-Python batch
-        # of a session pays ~3.5 s over an identical warm one (data
-        # batch 5.6 s cold vs 2.0 s warm on the same 100k rows). One
-        # 1-row synthetic stream — session setup, not any query's work.
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        def _warm_state(key, pdfs, state):
-            for _ in pdfs:
-                pass
-            yield __import__("pandas").DataFrame({"k": [key[0]]})
-
-        # warm the same backend the catalog streams run on (RocksDB
-        # native lib load + first store open) at a tiny partition count
-        _prev_provider = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        )
-        _prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        wq2 = (
-            spark.readStream.schema("id long")
-            .parquet(f"{warm_dir}/in")
-            .groupBy("id")
-            .applyInPandasWithState(
-                _warm_state,
-                "k long",
-                "s long",
-                "append",
-                GroupStateTimeout.NoTimeout,
+        with QueryScope(spark) as warm:
+            warm_dir = warm.scratch("bench_warm")
+            spark.range(1).write.mode("overwrite").parquet(f"{warm_dir}/in")
+            wq = (
+                spark.readStream.schema("id long")
+                .parquet(f"{warm_dir}/in")
+                .writeStream.outputMode("append")
+                .foreachBatch(lambda df, bid: df.write.format("noop").mode("overwrite").save())
+                .option("checkpointLocation", f"{warm_dir}/ckpt")
+                .trigger(availableNow=True)
+                .start()
             )
-            .writeStream.outputMode("append")
-            # a real (1-row) parquet write: the catalog's foreachBatch
-            # sinks write parquet, and the session's FIRST parquet write
-            # pays committer/codec init that noop never touches
-            .foreachBatch(
-                lambda df, bid: df.write.mode("overwrite").parquet(
-                    f"{warm_dir}/sink"
+            wq.awaitTermination(120)
+            wq.stop()
+            # The PYTHON stateful path (applyInPandasWithState) spins up
+            # separately from the stateless micro-batch machinery warmed
+            # above: state-server channel, Arrow state serde, grouped-state
+            # Python runner. Measured r14: the first stateful-Python batch
+            # of a session pays ~3.5 s over an identical warm one (data
+            # batch 5.6 s cold vs 2.0 s warm on the same 100k rows). One
+            # 1-row synthetic stream — session setup, not any query's work.
+            from pyspark.sql.streaming.state import GroupStateTimeout
+
+            def _warm_state(key, pdfs, state):
+                for _ in pdfs:
+                    pass
+                yield __import__("pandas").DataFrame({"k": [key[0]]})
+
+            # warm the same backend the catalog streams run on (RocksDB
+            # native lib load + first store open) at a tiny partition count
+            warm.set_conf(
+                "spark.sql.streaming.stateStore.providerClass",
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider",
+            )
+            warm.set_conf("spark.sql.shuffle.partitions", "4")
+            wq2 = (
+                spark.readStream.schema("id long")
+                .parquet(f"{warm_dir}/in")
+                .groupBy("id")
+                .applyInPandasWithState(
+                    _warm_state,
+                    "k long",
+                    "s long",
+                    "append",
+                    GroupStateTimeout.NoTimeout,
                 )
+                .writeStream.outputMode("append")
+                # a real (1-row) parquet write: the catalog's foreachBatch
+                # sinks write parquet, and the session's FIRST parquet write
+                # pays committer/codec init that noop never touches
+                .foreachBatch(
+                    lambda df, bid: df.write.mode("overwrite").parquet(
+                        f"{warm_dir}/sink"
+                    )
+                )
+                .option("checkpointLocation", f"{warm_dir}/ckpt2")
+                .trigger(availableNow=True)
+                .start()
             )
-            .option("checkpointLocation", f"{warm_dir}/ckpt2")
-            .trigger(availableNow=True)
-            .start()
-        )
-        wq2.awaitTermination(120)
-        wq2.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", _prev_parts)
-        if _prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", _prev_provider
-            )
-        shutil.rmtree(warm_dir, ignore_errors=True)
+            wq2.awaitTermination(120)
+            wq2.stop()
     except Exception as exc:  # noqa: BLE001 — warmup must never kill the run
         print(f"# warmup stream skip: {exc}", file=sys.stderr)
 
@@ -340,8 +329,8 @@ def main() -> int:
             continue
         t0 = time.perf_counter()
         try:
-            df = spec.spark(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            with QueryScope(spark):
+                spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
             timings[name] = round(time.perf_counter() - t0, 3)
             print(f"# {name}: {timings[name]:.2f}s", file=sys.stderr)
         except Exception as exc:  # noqa: BLE001 — isolate, record, continue

@@ -19,6 +19,8 @@ ETL project, re-expressed Spark-first:
                    (``__spark_entry__.queries()``).
 - ``streaming``  — Structured Streaming equivalents of the reference's
                    event-shaped mechanisms (SURVEY.md §2.10).
+- ``scope``      — ``QueryScope``: the one owner of an entry's pins, conf
+                   changes and scratch dirs, plus the shared memo.
 
 Everything is DataFrame-declarative so Catalyst handles pruning, pushdown,
 folding, join strategy, and AQE; Python touches data only inside

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import HASH_MOD
 from ..functions.similarity import cosine_similarity, dot
+from ..scope import QueryScope
 
 
 def _as_double_vec(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -338,82 +339,83 @@ def kmeans_codebook(
     # them once instead of re-scanning + re-casting per iteration. At
     # 100 TB codebook training runs on a corpus SAMPLE (pass a sampled
     # DataFrame in), so the cached set stays executor-memory bounded.
-    c = _as_double_vec(corpus, id_col, vec_col).persist()
-    init_rows = c.orderBy("id").limit(k).collect()
-    cent = np.stack([np.asarray(r["vec"], dtype="float64") for r in init_rows])
-    sc = corpus.sparkSession.sparkContext
+    # Its own scope: the cache and the per-iteration broadcasts go when
+    # training returns or raises.
+    with QueryScope(corpus.sparkSession) as scope:
+        c = scope.pin(_as_double_vec(corpus, id_col, vec_col), count=False)
+        init_rows = c.orderBy("id").limit(k).collect()
+        cent = np.stack([np.asarray(r["vec"], dtype="float64") for r in init_rows])
+        sc = corpus.sparkSession.sparkContext
 
-    partial_schema = StructType(
-        [
-            StructField("pid", LongType(), False),
-            StructField("cell", LongType(), False),
-            StructField("psum", ArrayType(DoubleType()), False),
-            StructField("n", LongType(), False),
-        ]
-    )
-    for _ in range(iters):
-        bc = sc.broadcast(cent)
-        cn = np.sqrt((cent * cent).sum(axis=1))
-
-        def assign_partials(batches, _cn=cn):
-            # map-side combine: one (cell, sum, count) per cell per
-            # PARTITION (accumulated across its Arrow batches)
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            cm = bc.value
-            acc: dict[int, list] = {}
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = np.stack(pdf["vec"].to_numpy())
-                sim = (mat @ cm.T) / (
-                    np.sqrt((mat * mat).sum(axis=1))[:, None] * _cn[None, :]
-                )
-                cells = np.argmax(sim, axis=1)
-                for cell in np.unique(cells):
-                    block = mat[cells == cell]
-                    if cell in acc:
-                        acc[cell][0] += block.sum(axis=0)
-                        acc[cell][1] += len(block)
-                    else:
-                        acc[cell] = [block.sum(axis=0), len(block)]
-            if acc:
-                yield pd.DataFrame(
-                    {
-                        "pid": [pid] * len(acc),
-                        "cell": [int(c_) for c_ in acc],
-                        "psum": [list(v[0]) for v in acc.values()],
-                        "n": [int(v[1]) for v in acc.values()],
-                    }
-                )
-
-        partials = c.mapInPandas(assign_partials, partial_schema)
-
-        # merge ≤ partitions×k tiny partials into k centroids. Partials
-        # arrive in SHUFFLE order — float addition is order-sensitive,
-        # so sum them sorted by their source partition id or the same
-        # corpus on the same splits could yield 1-ulp-different
-        # centroids across runs (bit-exactness contract).
-        def cell_mean(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.sort_values("pid")
-            s = np.stack(pdf["psum"].to_numpy()).sum(axis=0)
-            n = int(pdf["n"].sum())
-            return pd.DataFrame(
-                {"cell": [int(pdf["cell"].iloc[0])], "vec": [list(s / n)]}
-            )
-
-        means = (
-            partials.groupBy("cell")
-            .applyInPandas(cell_mean, "cell long, vec array<double>")
-            .collect()
+        partial_schema = StructType(
+            [
+                StructField("pid", LongType(), False),
+                StructField("cell", LongType(), False),
+                StructField("psum", ArrayType(DoubleType()), False),
+                StructField("n", LongType(), False),
+            ]
         )
-        new_cent = cent.copy()  # empty cells keep their previous centroid
-        for r in means:
-            new_cent[r["cell"], :] = np.asarray(r["vec"], dtype="float64")
-        bc.unpersist()
-        cent = new_cent
-    c.unpersist()
+        for _ in range(iters):
+            bc = scope.own(sc.broadcast(cent))
+            cn = np.sqrt((cent * cent).sum(axis=1))
+
+            def assign_partials(batches, _cn=cn):
+                # map-side combine: one (cell, sum, count) per cell per
+                # PARTITION (accumulated across its Arrow batches)
+                from pyspark import TaskContext
+
+                pid = TaskContext.get().partitionId()
+                cm = bc.value
+                acc: dict[int, list] = {}
+                for pdf in batches:
+                    if len(pdf) == 0:
+                        continue
+                    mat = np.stack(pdf["vec"].to_numpy())
+                    sim = (mat @ cm.T) / (
+                        np.sqrt((mat * mat).sum(axis=1))[:, None] * _cn[None, :]
+                    )
+                    cells = np.argmax(sim, axis=1)
+                    for cell in np.unique(cells):
+                        block = mat[cells == cell]
+                        if cell in acc:
+                            acc[cell][0] += block.sum(axis=0)
+                            acc[cell][1] += len(block)
+                        else:
+                            acc[cell] = [block.sum(axis=0), len(block)]
+                if acc:
+                    yield pd.DataFrame(
+                        {
+                            "pid": [pid] * len(acc),
+                            "cell": [int(c_) for c_ in acc],
+                            "psum": [list(v[0]) for v in acc.values()],
+                            "n": [int(v[1]) for v in acc.values()],
+                        }
+                    )
+
+            partials = c.mapInPandas(assign_partials, partial_schema)
+
+            # merge ≤ partitions×k tiny partials into k centroids. Partials
+            # arrive in SHUFFLE order — float addition is order-sensitive,
+            # so sum them sorted by their source partition id or the same
+            # corpus on the same splits could yield 1-ulp-different
+            # centroids across runs (bit-exactness contract).
+            def cell_mean(pdf: "pd.DataFrame") -> "pd.DataFrame":
+                pdf = pdf.sort_values("pid")
+                s = np.stack(pdf["psum"].to_numpy()).sum(axis=0)
+                n = int(pdf["n"].sum())
+                return pd.DataFrame(
+                    {"cell": [int(pdf["cell"].iloc[0])], "vec": [list(s / n)]}
+                )
+
+            means = (
+                partials.groupBy("cell")
+                .applyInPandas(cell_mean, "cell long, vec array<double>")
+                .collect()
+            )
+            new_cent = cent.copy()  # empty cells keep their previous centroid
+            for r in means:
+                new_cent[r["cell"], :] = np.asarray(r["vec"], dtype="float64")
+            cent = new_cent
     return [(i, [float(x) for x in cent[i]]) for i in range(k)]
 
 
@@ -589,15 +591,12 @@ def two_level_codebook(
     coarse = kmeans_codebook(corpus, id_col, vec_col, k=k_c, iters=iters)
     # blocking assignment reads `iters`+1 more times below — cache it
     # (narrow: id, 64-dim vec, cell; executor-memory bounded exactly as
-    # kmeans_codebook's cached input is)
-    assigned = cell_assign(corpus, id_col, vec_col, coarse).persist()
-    # Unpersist the cached blocking and any live per-iteration
-    # broadcast even when a Lloyd step fails (ADVICE r12):
-    # _CODEBOOK_CACHE consumers retry within one process, so an
-    # error path that leaked them would pin executor memory for
-    # the session lifetime.
-    bc = None
-    try:
+    # kmeans_codebook's cached input is). Its own scope releases the
+    # cache and the per-iteration broadcasts even when a Lloyd step
+    # fails (ADVICE r12): memo consumers retry within one process, so a
+    # leaking error path would pin executor memory for the session.
+    with QueryScope(corpus.sparkSession) as scope:
+        assigned = scope.pin(cell_assign(corpus, id_col, vec_col, coarse), count=False)
 
         # fine init: per coarse cell, its fine_k smallest-id member vectors.
         # Σ fine_k ≈ k rows collected — the bounded model artifact itself.
@@ -636,12 +635,12 @@ def two_level_codebook(
             ]
         )
         for _ in range(iters):
-            bc = sc.broadcast(
+            bc = scope.own(sc.broadcast(
                 {
                     cell: (m, np.sqrt((m * m).sum(axis=1)))
                     for cell, m in fine_mats.items()
                 }
-            )
+            ))
 
             def fine_partials(batches):
                 # raw-cosine training argmax (ties → smallest fine idx),
@@ -707,13 +706,7 @@ def two_level_codebook(
                 new_mats[r["ccell"]][r["fine"], :] = np.asarray(
                     r["vec"], dtype="float64"
                 )
-            bc.unpersist()
-            bc = None
             fine_mats = new_mats
-    finally:
-        if bc is not None:
-            bc.unpersist()
-        assigned.unpersist()
 
     fine = {
         cell: [

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.generate import explode_nonempty
+from ..scope import own, pin
 from ..functions.text import whitespace_token_count, whitespace_tokens, word_ngrams
 
 # Same constants as functions.text.doc_fingerprint — shared so oracle SQL
@@ -401,7 +402,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    materialize: str | bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verify.
 
@@ -426,9 +426,8 @@ def minhash_lsh_pairs(
     x100 wall 70→51.6 s (hashed-join rework, zero spill,
     bench_runs/r10_scaling_minhash_rework.json; 53.2 s on the r11
     re-probe). The r10 eager-cache attempt (persist + count) was
-    MEASURED WRONG-TRADE and retired in r11 — see the materialize
-    comment below for the three-variant adjudication
-    (r11_minhash_materialize.json).
+    MEASURED WRONG-TRADE and retired in r11 — see the comment on
+    ``hashed`` below (r11_minhash_materialize.json).
     An explode-into-probe-rows + min_by/max_by
     regroup variant was MEASURED WORSE (133 s / 26 GB spill at x100 —
     the object-aggregate sort fallback over array payloads, the same
@@ -452,9 +451,10 @@ def minhash_lsh_pairs(
     # compute it once LOSES, measured clean-serial with join-mix and
     # separated spill/storage metrics at x100
     # (bench_runs/r11_minhash_materialize.json):
-    #   recompute (False):    53.2 s, zero spill,   238 MB shuffle, BHJ×3
-    #   persist  ("persist"): 69.5 s, 14.2 GB spill, 3.4 GB shuffle, SMJ
-    #   repartition("reuse"): 194 s, 18.9 GB spill, 8.3 GB shuffle, SMJ
+    #   recompute:            53.2 s, zero spill,   238 MB shuffle, BHJ×3
+    #   persist + count:      69.5 s, 14.2 GB spill, 3.4 GB shuffle, SMJ
+    #   repartition(id) + candidate semi-prune:
+    #                         194 s, 18.9 GB spill, 8.3 GB shuffle, SMJ
     # Mechanism: ANY materialization replaces the subtree's optimistic
     # lineage estimate with its real size, and the planner then demotes
     # the three broadcasts to SortMergeJoins that shuffle AND SORT the
@@ -467,14 +467,7 @@ def minhash_lsh_pairs(
     # corpus-sized frames; on a real cluster with real stats those
     # joins go SMJ and the scale cost center is the array verify — the
     # banding join (narrow (id, band, bucket) rows) is safe at any
-    # scale. materialize stays as a probe knob; None = False.
-    if materialize is None:
-        materialize = False
-    if materialize == "persist" or materialize is True:
-        hashed = hashed.persist()
-        hashed.count()
-    elif materialize == "reuse":
-        hashed = hashed.repartition(F.col("id"))
+    # scale.
     sigs = hashed.select("id", _sig_over_hashes(F.col("th"), num_hashes).alias("sig"))
     banded = sigs.select(
         "id", F.explode(_banded_sig_structs(rows_per_band, bands)).alias("bb")
@@ -492,25 +485,9 @@ def minhash_lsh_pairs(
         .distinct()
     )
 
-    verify = hashed
-    if materialize == "reuse":
-        # Candidate-id SEMI-PRUNE of the verify side — bounds the array
-        # payload downstream to ∝ near-dup candidates instead of corpus
-        # (the honest-scale shape). Measured ONLY in combination with
-        # the repartition materialization (r11_minhash_materialize.json
-        # "reuse": 194 s / 18.9 GB spill at x100): once real sizes
-        # exist the planner SMJs every join and the prune's own joins
-        # compound the loss, so the combination is a rejected probe
-        # arm, kept measurable behind the same knob.
-        cand_ids = (
-            candidates.select(F.col("id_a").alias("id"))
-            .unionByName(candidates.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        verify = hashed.join(cand_ids, "id", "left_semi")
     both = candidates.join(
-        verify.withColumnsRenamed({"id": "id_a", "th": "th_a"}), "id_a"
-    ).join(verify.withColumnsRenamed({"id": "id_b", "th": "th_b"}), "id_b")
+        hashed.withColumnsRenamed({"id": "id_a", "th": "th_a"}), "id_a"
+    ).join(hashed.withColumnsRenamed({"id": "id_b", "th": "th_b"}), "id_b")
     return (
         both.withColumn("_inter", F.size(F.array_intersect("th_a", "th_b")))
         .withColumn(
@@ -1201,7 +1178,10 @@ def connected_components(
     new round has materialized: the r06 ×30 scale run proved that
     accumulated round checkpoints otherwise fill the protected storage
     region until execution memory starves (SparkOutOfMemoryError
-    UNABLE_TO_ACQUIRE_MEMORY), a leak invisible at sf0.1. A cluster
+    UNABLE_TO_ACQUIRE_MEMORY), a leak invisible at sf0.1. The final
+    round's blocks back the returned frame; the current ``QueryScope``
+    owns them (``scope.own``), so they go when the caller's scope
+    closes. A cluster
     deployment with preemptible executors should call
     ``sparkContext.setCheckpointDir`` and pass ``reliable_checkpoint=
     True`` for reliable ``checkpoint()`` (replay from the checkpoint
@@ -1301,6 +1281,10 @@ def connected_components(
         prev_sig = sig
     else:
         raise RuntimeError(f"connected_components: no fixpoint in {max_iterations} rounds")
+    if prev_round_rdd is not None:
+        # the returned frame reads the final round's blocks: they live
+        # as long as the caller's scope
+        own(prev_round_rdd)
     # At the fixpoint every edge points child→root (root = component min);
     # roots appear only as v, so they'd be missing from a u-only rollup —
     # union each component's root back in (component = itself) so every
@@ -1509,8 +1493,7 @@ def minhash_lookup_pairs(
         # join + one semi-join per shingle side) — lazy, AQE's
         # concurrent stage materialization would re-run the banding
         # join per consumer.
-        cand = cand.persist()
-        cand.count()
+        cand = pin(cand)
         sh_b = shingle_sets(
             batch.join(
                 cand.select(F.col("b_id").alias(id_col)), id_col, "leftsemi"

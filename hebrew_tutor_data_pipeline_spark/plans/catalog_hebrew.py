@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions import similarity
 from ..operators import alignment, intervals
+from ..scope import pin, scratch
 from ..sources.readers import read_nested_json_corpus
 from .catalog import CATALOG, T, _register
 from .catalog_ml import (
@@ -683,15 +684,10 @@ def alignment_sink_pyds_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     task can never leave a torn or duplicate chapter file (contrast the
     reference's non-atomic in-place writes,
     `scripts/hebrew_alignment_tool_gpu.py:589-609`)."""
-    import tempfile
-
     from ..sources.pyds import register_chapter_source
 
     register_chapter_source(spark)
-    out = str(
-        Path(tempfile.gettempdir())
-        / f"htdp_pyds_alignment_sink_{spark.sparkContext.applicationId}"
-    )
+    out = str(scratch(spark, "pyds_alignment_sink"))
     verses = corpus_verses_df(spark).filter(F.col("book").isin("Gen", "Obad")).select(
         "book", "chapter", "verse_num", F.concat_ws(" ", "words").alias("text")
     )
@@ -1020,8 +1016,6 @@ def chapter_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     they compose. Deterministic throughout, so the rows-only check is
     stable; the invariants themselves are asserted in
     tests/test_chapter_pipeline.py."""
-    import tempfile
-
     # 2. chapters having BOTH corpus text and audio (broadcast dim join)
     ch = chapter_texts(spark).join(F.broadcast(audio_duration_dim(spark)), ["book", "chapter"])
 
@@ -1039,10 +1033,7 @@ def chapter_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 7. S7/S8 partitioned sink + read-back (app-scoped dir: two
     # concurrent sessions must not race on the same path)
-    out = str(
-        Path(tempfile.gettempdir())
-        / f"htdp_e2e_{spark.sparkContext.applicationId}"
-    )
+    out = str(scratch(spark, "e2e"))
     flagged.write.partitionBy("book").mode("overwrite").json(out)
     return (
         spark.read.schema(
@@ -1208,8 +1199,7 @@ def trimmer_intro_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.stat().st_size for p in Path(FIXTURE_AUDIO_TREE).glob("**/*.mp3")
     )
     if tree_bytes >= 32 << 20:
-        segs = segs.persist()
-        segs.count()  # pin: concurrent AQE stages race a lazy boundary
+        segs = pin(segs)  # concurrent AQE stages race a lazy boundary
     thr = audio_ops.intro_threshold(segs, skip_segments=2, factor=0.3)
     sugg = audio_ops.suggest_intro_trim(
         segs, skip_segments=2, factor=0.3, buffer_seconds=0.25, min_trim=1.0
@@ -1342,42 +1332,39 @@ def trimmer_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``book_dir/filename`` relative path, not the basename, so equal
     filenames under different book directories cannot cross-join."""
     import shutil
-    import tempfile
 
     from ..operators import audio as audio_ops
     from ..operators.binary_sink import overwrite_with_backup, restore_from_backup
     from ..sources.readers import read_binary_files
 
-    app = spark.sparkContext.applicationId
-    scratch = Path(tempfile.gettempdir()) / f"htdp_trim_{app}"
-    backup = Path(tempfile.gettempdir()) / f"htdp_trim_backup_{app}"
-    snap = Path(tempfile.gettempdir()) / f"htdp_trim_snap_{app}"
-    for p in (scratch, backup, snap):
+    work = scratch(spark, "trim")
+    backup = scratch(spark, "trim_backup")
+    snap = scratch(spark, "trim_snap")
+    for p in (work, backup, snap):
         if p.exists():
             shutil.rmtree(p)
-    shutil.copytree(FIXTURE_AUDIO_TREE, scratch)  # mutable working copy
+    shutil.copytree(FIXTURE_AUDIO_TREE, work)  # mutable working copy
 
     def scan():
-        return read_binary_files(spark, str(scratch), glob="*.mp3").filter(
+        return read_binary_files(spark, str(work), glob="*.mp3").filter(
             F.col("length") >= 1024
         )
 
     # shared decode/tile/quiet front — the exact frames the value-hash-
     # gated trimmer_intro_analysis pins
-    files, wf = _trimmer_waveforms(spark, str(scratch))
+    files, wf = _trimmer_waveforms(spark, str(work))
     # Persist the per-second RMS segments (rows = files × seconds —
     # tiny vs the waveforms): every downstream consumer (threshold,
     # first-loud, duration, report) reads the cache, so the decode +
     # tile + explode pipeline executes exactly once. Duration comes from
     # the last segment's end (== total_samples/sr exactly) instead of a
     # second decode pass over the samples.
-    segs = audio_ops.rms_energy_segments(wf, segment_seconds=1.0).persist()
     # EAGER (r14): AQE runs independent query stages concurrently, and a
     # lazy boundary consumed by several of them (threshold, first-loud,
     # duration, report) races — each re-runs the MapInPandas decode+tile
     # pipeline (the curation_refresh_e2e bimodality class; this entry
     # read 0.58× in the r13 driver run with no hot-path code change).
-    segs.count()
+    segs = pin(audio_ops.rms_energy_segments(wf, segment_seconds=1.0))
     sugg = audio_ops.suggest_intro_trim(
         segs, skip_segments=2, factor=0.3, buffer_seconds=0.25, min_trim=1.0
     ).join(segs.groupBy("path").agg(F.max("end_time").alias("duration")), "path")
@@ -1400,19 +1387,19 @@ def trimmer_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     payloads = snap / "payloads"
     to_trim.write.mode("overwrite").parquet(str(payloads))
-    overwrite_with_backup(spark.read.parquet(str(payloads)), str(backup), str(scratch))
+    overwrite_with_backup(spark.read.parquet(str(payloads)), str(backup), str(work))
 
     # snapshot trimmed lengths BEFORE restoring (no size gate here: a
     # trim may legitimately push a small file under the 1 KB inventory
     # threshold and it must still be reported)
-    read_binary_files(spark, str(scratch), glob="*.mp3").select(
+    read_binary_files(spark, str(work), glob="*.mp3").select(
         relpath.alias("relpath"),
         F.regexp_extract("path", r"([^/]+)$", 1).alias("filename"),
         F.col("length").alias("trimmed_length"),
         F.md5("content").alias("trimmed_md5"),
     ).write.mode("overwrite").parquet(str(snap / "trimmed"))
 
-    n_restored = restore_from_backup(spark, str(backup), str(scratch))
+    n_restored = restore_from_backup(spark, str(backup), str(work))
     if n_restored == 0:
         raise RuntimeError(
             "trimmer pipeline: nothing was restored — either no file "
@@ -1433,7 +1420,7 @@ def trimmer_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the returned plan depends only on the fixture tree + snapshots —
     # release the cache and the mutable trees before returning
     segs.unpersist()
-    shutil.rmtree(scratch, ignore_errors=True)
+    shutil.rmtree(work, ignore_errors=True)
     shutil.rmtree(backup, ignore_errors=True)
 
     orig = read_binary_files(spark, str(FIXTURE_AUDIO_TREE), glob="*.mp3").select(
@@ -1464,13 +1451,8 @@ def alignment_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     = the reference's atomic tmp+rename, S8), read the directory back,
     return the rows — which must equal what was written
     (`scripts/hebrew_alignment_tool_gpu.py:589-609`)."""
-    import tempfile
-
     # app-scoped dir: two concurrent sessions must not race on one path
-    out = str(
-        Path(tempfile.gettempdir())
-        / f"htdp_spark_alignment_sink_{spark.sparkContext.applicationId}"
-    )
+    out = str(scratch(spark, "spark_alignment_sink"))
     verses = corpus_verses_df(spark).filter(F.col("book").isin("Gen", "Obad")).select(
         "book", "chapter", "verse_num", F.concat_ws(" ", "words").alias("text")
     )
@@ -2179,7 +2161,7 @@ def blob_upload_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks against the original fixture bytes it reads independently.
     App-scoped container dir: concurrent sessions never race."""
     import shutil
-    import tempfile
+
     from ..operators.binary_sink import upload_blobs
     from ..sources.readers import read_binary_files
     from ..streaming.sources import _sweep_stale_scratch
@@ -2195,10 +2177,7 @@ def blob_upload_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             "blob_rel", F.regexp_extract("path", r"([^/]+/[^/]+)$", 1)
         )
     )
-    container = str(
-        Path(tempfile.gettempdir())
-        / f"htdp_blob_{spark.sparkContext.applicationId}"
-    )
+    container = str(scratch(spark, "blob"))
     shutil.rmtree(container, ignore_errors=True)
     upload_blobs(files, container_dir=container, name_col="blob_rel")
     upload_blobs(files, container_dir=container, name_col="blob_rel")  # idempotent overwrite

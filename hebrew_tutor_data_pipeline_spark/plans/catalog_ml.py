@@ -25,7 +25,11 @@ from ..sources.readers import spread
 from ..operators import alignment, ann, dedup
 from ..operators import membership as membership_mod
 from ..operators import freqsketch as freqsketch_mod
+from ..scope import clear_memo, memo, pin
 from .catalog import CATALOG, T, _register
+
+# the historical per-memo clear helpers, kept for the harnesses that call them
+clear_dedup_cluster_cache = clear_codebook_cache = clear_bpe_merge_cache = clear_memo
 
 HASH_MOD = dedup.HASH_MOD
 HASH_BASE = dedup.HASH_BASE
@@ -685,8 +689,7 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify — sits under the value-hash gate."""
     d = spread(T(spark, sf_dir, "documents").filter(F.col("doc_id") < 200))
     return dedup.minhash_lsh_pairs(
-        d, "doc_id", "text", n=2, num_hashes=32, bands=8, threshold=0.2,
-        materialize=False,  # 200-doc panel: skip even the gating count
+        d, "doc_id", "text", n=2, num_hashes=32, bands=8, threshold=0.2
     )
 
 
@@ -1106,8 +1109,7 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # discipline as bits/k: the plan adapts to the corpus count. Plain
     # lineage-intact cache — safely evictable, unlike a checkpoint.
     if n >= 100_000:
-        fps = fps.persist()
-        fps.count()
+        fps = pin(fps)
     # g (the quotient frame — one narrow row per distinct fingerprint)
     # is consumed by the banded join, the neighbor-multiplicity side,
     # and the degree build. EAGER persist-locking (r14): AQE submits
@@ -1116,8 +1118,7 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # root cause as curation_refresh_e2e's bimodality. Measured sf0.1
     # A/B (cache-cleared, alternating): lazy 6.3-10.6 s with a 45 s
     # outlier → 3.7-4.5 s pinned, identical values.
-    g = fps.groupBy("simhash").agg(F.count(F.lit(1)).alias("m")).persist()
-    g.count()
+    g = pin(fps.groupBy("simhash").agg(F.count(F.lit(1)).alias("m")))
     adjp = dedup._banded_hamming_pairs(
         g.select(F.col("simhash").alias("id"), "simhash"), bits, 2, 1
     ).select("id_a", "id_b")
@@ -1128,10 +1129,10 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 before-plan held 204 Exchange nodes for a 2-round walk).
     # Quotient-sized (2 BIGINTs per near-dup fp pair), lineage intact —
     # an eviction degrades to recompute (guide §2.4/§5).
-    adj = adjp.unionAll(
+    # 3 consumers (degree fold + one join per round) — pin
+    adj = pin(adjp.unionAll(
         adjp.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    ).persist()
-    adj.count()  # 3 consumers (degree fold + one join per round) — pin
+    ))
     nb = g.select(
         F.col("simhash").alias("id_b"),
         F.col("m").alias("mb"),
@@ -1157,7 +1158,8 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         # loop's round-materialization discipline applied to the second
         # iterative operator). One narrow quotient-sized row per
         # distinct fingerprint.
-        cf = pr.select(
+        # pinned: the inbox aggregate + damping join race otherwise
+        cf = pin(pr.select(
             "simhash",
             "m",
             "deg",
@@ -1165,8 +1167,7 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit(0))
             .cast("long")
             .alias("c"),
-        ).persist()
-        cf.count()  # inbox aggregate + damping join race otherwise
+        ))
         crs = (
             adj.join(
                 cf.select(
@@ -1198,36 +1199,18 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared SimHash clustering, memoized per (application, sf_dir): the
-# cluster labeling (dedup_clusters) and its size-distribution report
-# (dedup_cluster_stats) are two views over ONE connected-components
-# run — without sharing, the report re-paid the full fingerprint +
-# banded-join + star-contraction pipeline (~7 s EACH at sf0.1, the #3
-# and #5 catalog entries by cost). Same discipline as _BLOOM_SHARED:
-# the memo holds the persisted (doc_id, component_id) labeling — two
-# BIGINTs per document, no array payload — lineage stays intact so an
-# external unpersist degrades to recompute, never to wrong answers,
-# and entries beyond 4 keys FIFO-evict with an unpersist. At 100 TB
-# this is the realistic pipeline shape anyway: components are computed
-# once and every report derives from the labeled frame.
-_DEDUP_LAB_SHARED: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_dedup_cluster_cache() -> None:
-    """Drop the shared cluster-labeling memo (probes/tests); persisted
-    frames are unpersisted best-effort and the next caller recomputes."""
-    for lab in _DEDUP_LAB_SHARED.values():
-        try:
-            lab.unpersist()
-        except Exception:  # noqa: BLE001 — teardown is best-effort
-            pass
-    _DEDUP_LAB_SHARED.clear()
-
-
+# Shared SimHash clustering (scope.memo): the cluster labeling
+# (dedup_clusters) and its size-distribution report (dedup_cluster_stats)
+# are two views over ONE connected-components run — without sharing, the
+# report re-paid the full fingerprint + banded-join + star-contraction
+# pipeline (~7 s EACH at sf0.1, the #3 and #5 catalog entries by cost).
+# The memo holds the lazily pinned (doc_id, component_id) labeling — two
+# BIGINTs per document, no array payload — plus the final CC round's
+# checkpoint it reads. At 100 TB this is the realistic pipeline shape
+# anyway: components are computed once and every report derives from
+# the labeled frame.
 def _dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    lab = _DEDUP_LAB_SHARED.get(key)
-    if lab is None:
+    def build() -> DataFrame:
         d = spread(T(spark, sf_dir, "documents"))
         # 30-bit fingerprints, bands=2 (15-bit bands): pigeonhole still
         # exact for d <= 1. Width matters as much as banding — 16-bit
@@ -1252,25 +1235,13 @@ def _dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         cc = dedup.connected_components(
             edges, "id_a", "id_b", dedupe_edges=False
         )
-        lab = (
-            d.select("doc_id")
-            .join(cc, F.col("doc_id") == cc["node"], "left")
-            .select(
-                "doc_id",
-                F.coalesce("component", "doc_id").alias("component_id"),
-            )
-            .persist()
+        lab = d.select("doc_id").join(cc, F.col("doc_id") == cc["node"], "left").select(
+            "doc_id",
+            F.coalesce("component", "doc_id").alias("component_id"),
         )
-        while len(_DEDUP_LAB_SHARED) >= 4:
-            # FIFO: evict the OLDEST key (dict preserves insertion
-            # order; popitem() would pop the newest — ADVICE r11).
-            old = _DEDUP_LAB_SHARED.pop(next(iter(_DEDUP_LAB_SHARED)))
-            try:
-                old.unpersist()
-            except Exception:  # noqa: BLE001 — eviction is best-effort
-                pass
-        _DEDUP_LAB_SHARED[key] = lab
-    return lab
+        return pin(lab, count=False)
+
+    return memo(spark, ("dedup_cluster_labels", sf_dir), build)
 
 
 @_register(
@@ -1636,34 +1607,17 @@ def ann_ivf_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # One deterministic codebook serves every consumer (IVF probe, SemDeDup
 # blocking, outlier scoring): training is a pure function of the table
-# and hyperparameters, so it is memoized per process — the same move a
+# and hyperparameters, so it is memoized (scope.memo) — the same move a
 # production deployment makes by persisting the codebook as a model
-# artifact instead of re-running Lloyd per query.
-#
-# PROCESS-LIFETIME ASSUMPTION: the cache key is (sf_dir, k, iters), so a
-# process that REGENERATES the parquet under an sf_dir it already trained
-# on would silently reuse the stale codebook. The driver never does this
-# (testdata is regenerated between processes, not within one), but any
-# harness that rewrites embeddings in-place must call
-# ``clear_codebook_cache()`` between generations.
-_CODEBOOK_CACHE: dict[tuple, list] = {}
-
-
-def clear_codebook_cache() -> None:
-    """Drop every memoized k-means codebook (see the process-lifetime
-    note on ``_CODEBOOK_CACHE``); the next query retrains from the
-    current table bytes."""
-    _CODEBOOK_CACHE.clear()
-
-
+# artifact instead of re-running Lloyd per query. The key is the
+# directory, not its bytes: a harness that rewrites embeddings in place
+# under one sf_dir must call ``clear_memo()`` between generations.
 def _embeddings_codebook(spark: SparkSession, sf_dir: str, k: int = 16, iters: int = 2):
-    key = (sf_dir, k, iters)
-    if key not in _CODEBOOK_CACHE:
+    def build():
         e = spread(T(spark, sf_dir, "embeddings"))
-        _CODEBOOK_CACHE[key] = ann.kmeans_codebook(
-            e, "vec_id", "embedding", k=k, iters=iters
-        )
-    return _CODEBOOK_CACHE[key]
+        return ann.kmeans_codebook(e, "vec_id", "embedding", k=k, iters=iters)
+
+    return memo(spark, ("codebook", sf_dir, k, iters), build)
 
 
 
@@ -1791,17 +1745,17 @@ tl AS (
 
 
 def _embeddings_codebook2(spark: SparkSession, sf_dir: str, k: int):
-    """Memoized two-level codebook over the embeddings table — same
-    process-lifetime contract as ``_embeddings_codebook`` (one model
-    artifact per (sf_dir, k); ``clear_codebook_cache`` drops it)."""
-    key = (sf_dir, "two-level", k, 2)
-    if key not in _CODEBOOK_CACHE:
+    """Memoized two-level codebook over the embeddings table — one model
+    artifact per (sf_dir, k), like ``_embeddings_codebook``."""
+
+    def build():
         e = spread(T(spark, sf_dir, "embeddings"))
-        _CODEBOOK_CACHE[key] = ann.two_level_codebook(
+        return ann.two_level_codebook(
             e, "vec_id", "embedding", k=k, iters=2,
             target_cell=_SEMDEDUP_TARGET_CELL,
         )
-    return _CODEBOOK_CACHE[key]
+
+    return memo(spark, ("codebook", sf_dir, "two-level", k, 2), build)
 
 
 def _semdedup_k_for(n: int) -> int:
@@ -2055,9 +2009,7 @@ def _bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r14): a lazy boundary with two consumers in one action races
     # under AQE's concurrent stage materialization — the count pins the
     # posting scan to exactly one execution.
-    top = top.persist()
-    top.count()
-    return top
+    return pin(top)
 
 
 @_register(
@@ -4201,8 +4153,7 @@ def curation_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with more cores because more stages run at once). One count()
     # per load-bearing boundary pins each subtree to exactly one
     # computation — the same persist-locking the CC star loop uses.
-    staged = _snapshot_flat(spark, sf_dir).persist()
-    staged.count()
+    staged = pin(_snapshot_flat(spark, sf_dir))
     changed = _snapshot_changed()
     delta = staged.filter(F.col("in_b") & (~F.col("in_a") | changed)).select(
         "doc_id", "source", _snapshot_new_text().alias("text")
@@ -4214,11 +4165,9 @@ def curation_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-row O(k²) HOFs re-evaluate per ELEMENT (first measurement of
     # this entry: 451 s at sf0.1; with the boundary ~2 s). The cached
     # frame is delta-sized and numeric.
-    m = _quality_metrics(delta).persist()
-    kept = delta.join(
-        m.filter(_quality_keep()).select("doc_id"), "doc_id"
-    ).persist()
-    kept.count()  # 3 consumers (two banding sides + the restore join)
+    m = pin(_quality_metrics(delta), count=False)
+    # 3 consumers (two banding sides + the restore join)
+    kept = pin(delta.join(m.filter(_quality_keep()).select("doc_id"), "doc_id"))
     looked = dedup.minhash_lookup_pairs(
         kept.select("doc_id", "text"),
         staged.filter(F.col("in_a")).select("doc_id", "text"),
@@ -4226,18 +4175,16 @@ def curation_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=3, num_hashes=32, bands=16, threshold=0.5,
         index_rows=_corpus_rows(spark, sf_dir, "documents"),
     )
-    unique_ids = (
-        looked.filter(F.col("is_unique")).select(F.col("id").alias("doc_id")).persist()
-    )
-    unique_ids.count()  # pins the whole lookup to one execution
+    # pins the whole lookup to one execution
+    unique_ids = pin(looked.filter(F.col("is_unique")).select(F.col("id").alias("doc_id")))
     # refreshed corpus = unchanged ∪ unique, with source carried from
     # the cache (no documents re-scan, no join against a docs table)
     uqs = kept.select("doc_id", "source").join(unique_ids, "doc_id")
     unchanged = staged.filter(
         F.col("in_a") & F.col("in_b") & ~changed
     ).select("doc_id", "source")
-    refreshed = unchanged.unionByName(uqs).persist()
-    refreshed.count()  # consumed by the tag union AND the acceptance pass
+    # consumed by the tag union AND the acceptance pass
+    refreshed = pin(unchanged.unionByName(uqs))
 
     # ONE tagged union + conditional aggregation computes the mixture's
     # per-source sizes AND all three funnel columns (guide §2.4): the
@@ -4279,12 +4226,12 @@ def curation_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a ≤|sources|-row persist keeps the union+agg subtree from
     # re-executing per reference (the r13 mixture-persist finding, now
     # scoped to ONE tiny frame)
-    rates = per_source.select(
+    # pinned: the acceptance broadcast + output join race otherwise
+    rates = pin(per_source.select(
         "group", "n_docs", "n_delta", "n_delta_kept", "n_delta_unique",
         F.round(pw / z, 6).alias("weight"),
         F.round(raw_rate * 1_000_000, 0).cast("long").alias("rate_ppm"),
-    ).persist()
-    rates.count()  # acceptance broadcast + output join race otherwise
+    ))
     accept_hash = dedup.token_hash(
         F.concat(F.lit("mix|"), F.col("doc_id").cast("string"))
     ) % 1_000_000
@@ -4478,37 +4425,21 @@ def _bpe_top_pair_sql(tcte: str) -> str:
     GROUP BY 1, 2 ORDER BY c DESC, l, r LIMIT 1"""
 
 
-# Shared BPE merge table, memoized per (application, sf_dir): all three
-# BPE entries (merge_rounds / encode_corpus / vocab_coverage) train the
-# IDENTICAL 3-round table — each training round is a corpus-wide pair
-# count, so without sharing the catalog paid 9 corpus passes for one
-# 3-row model artifact (the _BLOOM_SHARED / _DEDUP_LAB_SHARED
-# discipline). The memo holds the DRIVER-SIDE collected rows (3 tuples
-# of 2 strings + 2 ints — no persisted frame, no lifecycle), keyed by
-# applicationId so it dies with the session; FIFO-evicts beyond 4 keys.
-# At 100 TB this is the realistic tokenizer shape anyway: the merge
-# table is fit once and every consumer applies it.
-_BPE_MERGES_SHARED: dict[tuple[str, str], list] = {}
-
-
-def clear_bpe_merge_cache() -> None:
-    """Drop the shared BPE merge-table memo (probes/tests); the next
-    caller retrains from the corpus."""
-    _BPE_MERGES_SHARED.clear()
-
-
+# Shared BPE merge table (scope.memo): all three BPE entries
+# (merge_rounds / encode_corpus / vocab_coverage) train the IDENTICAL
+# 3-round table — each training round is a corpus-wide pair count, so
+# without sharing the catalog paid 9 corpus passes for one 3-row model
+# artifact. The memo holds the COLLECTED rows (3 tuples of 2 strings +
+# 2 ints). At 100 TB this is the realistic tokenizer shape
+# anyway: the merge table is fit once and every consumer applies it.
 def _bpe_merge_table(spark: SparkSession, sf_dir: str) -> list:
     from ..operators import bpe
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    rows = _BPE_MERGES_SHARED.get(key)
-    if rows is None:
+    def build() -> list:
         d = spread(T(spark, sf_dir, "documents"))
-        rows = bpe.bpe_merges(d, "doc_id", "text", rounds=3).collect()
-        while len(_BPE_MERGES_SHARED) >= 4:
-            _BPE_MERGES_SHARED.pop(next(iter(_BPE_MERGES_SHARED)))
-        _BPE_MERGES_SHARED[key] = rows
-    return rows
+        return bpe.bpe_merges(d, "doc_id", "text", rounds=3).collect()
+
+    return memo(spark, ("bpe_merges", sf_dir), build)
 
 
 @_register(
@@ -4725,8 +4656,7 @@ def dedup_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, "doc_id", "text", n=2, threshold=0.2, max_shingle_freq=None
     )
     cand = dedup.minhash_lsh_pairs(
-        d, "doc_id", "text", n=2, num_hashes=32, bands=8, threshold=0.2,
-        materialize=False,  # evaluation panel: skip even the gating count
+        d, "doc_id", "text", n=2, num_hashes=32, bands=8, threshold=0.2
     )
     th = spark.createDataFrame([(0.2,), (0.4,), (0.6,), (0.8,)], "threshold double")
     tn = (
@@ -4997,47 +4927,31 @@ def _bloom_sql(select: str) -> str:
     )
 
 
-# Shared Bloom build, memoized per (application, sf_dir): the membership
-# entry and its FPR certificate are two views over ONE filter — without
-# sharing, each paid the full canonicalize-fold ~3x (the eager m-count
-# plus both plan sides), ~28 s EACH at sf10/x100 (VERDICT r10 next #7).
-# The index keys and the position table persist (narrow strings / BIGINTs
-# — no array payload, so the minhash persist-demotes-broadcast hazard
-# does not apply: every downstream join here is int-keyed and SMJ-honest
-# at scale anyway); the first entry to execute populates them and the
-# second rides the cache. Lineage stays intact, so an unpersist (e.g.
-# scale_bench hygiene between queries) degrades to recompute, never to
-# wrong answers. Bounded: entries evict (and unpersist) beyond 4 keys.
-_BLOOM_SHARED: dict[tuple[str, str], dict] = {}
-
-
+# Shared Bloom build (scope.memo): the membership entry and its FPR
+# certificate are two views over ONE filter — without sharing, each paid
+# the full canonicalize-fold ~3x (the eager m-count plus both plan
+# sides), ~28 s EACH at sf10/x100 (VERDICT r10 next #7). The index keys
+# and the position table are pinned (narrow strings / BIGINTs — no
+# array payload, so the minhash persist-demotes-broadcast hazard does
+# not apply: every downstream join here is int-keyed and SMJ-honest at
+# scale anyway); the first entry to execute fills them and the second
+# rides the cache.
 def _bloom_parts(spark: SparkSession, sf_dir: str) -> dict:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    parts = _BLOOM_SHARED.get(key)
-    if parts is None:
+    def build() -> dict:
         u = T(spark, sf_dir, "documents").select(
             "doc_id", urls.canonicalize_url(_url_raw_spark()).alias("curl")
         )
-        idx = (
-            u.filter(F.expr(_BLOOM_INDEX_PRED_SPARK)).select("curl").distinct().persist()
+        idx = pin(
+            u.filter(F.expr(_BLOOM_INDEX_PRED_SPARK)).select("curl").distinct(),
+            count=False,
         )
         n_index = idx.count()
         m = membership_mod.bloom_m_for(n_index)
-        bits = membership_mod.bloom_bits(idx, "curl", m).persist()
+        bits = pin(membership_mod.bloom_bits(idx, "curl", m), count=False)
         batch = u.filter(F.expr(_BLOOM_BATCH_PRED_SPARK)).select("curl")
-        parts = {"idx": idx, "bits": bits, "batch": batch, "m": m, "n_index": n_index}
-        while len(_BLOOM_SHARED) >= 4:
-            # FIFO: evict the OLDEST key (dict preserves insertion order).
-            # dict.popitem() pops the NEWEST — with it, the three oldest
-            # persisted frames were never evictable (ADVICE r11).
-            old = _BLOOM_SHARED.pop(next(iter(_BLOOM_SHARED)))
-            for f in (old["idx"], old["bits"]):
-                try:
-                    f.unpersist()
-                except Exception:  # noqa: BLE001 — eviction is best-effort
-                    pass
-        _BLOOM_SHARED[key] = parts
-    return parts
+        return {"idx": idx, "bits": bits, "batch": batch, "m": m, "n_index": n_index}
+
+    return memo(spark, ("bloom_parts", sf_dir), build)
 
 
 @_register(

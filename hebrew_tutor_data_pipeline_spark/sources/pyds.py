@@ -37,6 +37,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from ..scope import set_conf
+
 #: (book string, chapter int, ...) — the computed-candidate grid with
 #: the probe result. `filename` is the COMPUTED candidate (2-digit form
 #: unless the 3-digit probe hit — the Psalms-analog irregular branch).
@@ -52,7 +54,7 @@ def register_chapter_source(spark) -> None:
     runtime SQL conf, set here so a PLAIN driver session works: a
     reader that implements ``pushFilters`` hard-fails at planning when
     the flag is off). Idempotent."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    set_conf(spark, "spark.sql.python.filterPushdown.enabled", "true")
     for source in (ChapterAudioDataSource, AlignmentJsonDataSource):
         try:
             spark.dataSource.register(source)

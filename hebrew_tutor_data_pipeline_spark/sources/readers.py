@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampNTZType
 
+from ..scope import set_conf
+
 TPCH_TABLES = (
     "region",
     "nation",
@@ -44,7 +46,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in NANO_TS_COLS:
         # Must hold for any caller-supplied session (e.g. the driver's),
         # not only ones built by session.get_spark(); runtime-settable.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        set_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     for col in NANO_TS_COLS.get(name, ()):
         if col in df.columns and dict(df.dtypes)[col] == "bigint":

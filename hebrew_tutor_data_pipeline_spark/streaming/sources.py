@@ -19,6 +19,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..scope import QueryScope, scratch, set_conf
+
 #: Schema of the synthetic `events` table as a stream (file sources
 #: require an explicit schema — no runtime inference on unbounded input).
 EVENTS_STREAM_SCHEMA = StructType(
@@ -67,7 +69,7 @@ def events_parquet_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch metadata probe — file sources cannot infer on unbounded input."""
     import os
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    set_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(path).schema
     if os.path.isdir(path):
@@ -220,24 +222,21 @@ def run_available_now_to_parquet(
     emits zero rows still reads back as an empty typed frame rather
     than a schema-inference error: an empty schema-carrier frame is
     written AFTER the run iff no batch produced output (os-level check,
-    zero Spark jobs). The checkpoint is deleted after completion, the
-    output dir stays readable for the session (the returned frame is
-    lazy). A production deployment swaps the sink body for its real
+    zero Spark jobs). The checkpoint is deleted after completion; the
+    output dir (the returned frame is lazy) stays readable until the
+    current ``QueryScope`` closes, or for the session outside one. The
+    state-store provider conf is restored by that scope too, and the
+    state-partition override right after ``start()``. A production deployment swaps the sink body for its real
     writer; the plan above it is unchanged."""
     import shutil
-    import tempfile
     from pathlib import Path
 
     spark = df.sparkSession
     _sweep_stale_scratch(spark.sparkContext.applicationId)
-    scratch = (
-        Path(tempfile.gettempdir())
-        / f"htdp_stream_{query_name}_{spark.sparkContext.applicationId}"
-        / scratch_key
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
-    out = str(scratch / "out")
-    ckpt = str(scratch / "ckpt")
+    work = scratch(spark, f"stream_{query_name}") / scratch_key
+    shutil.rmtree(work, ignore_errors=True)
+    out = str(work / "out")
+    ckpt = str(work / "ckpt")
     empty = spark.createDataFrame([], df.schema)
     if output_mode == "complete":
 
@@ -252,23 +251,19 @@ def run_available_now_to_parquet(
     if state_store_provider:
         # session conf is captured per-query at start — affects only
         # streams started after this point, never a running query
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", state_store_provider
-        )
-    restore_parts: str | None = None
-    if input_rows is not None:
-        # size state partitions to the bounded input (state_partitions_for
-        # rationale above); the conf is cloned into the query at start(),
-        # so restoring right after never touches the running stream. Each
-        # run gets a FRESH checkpoint (scratch cleared above), so the
-        # partition count frozen into the checkpoint can never conflict
-        # with a later run's choice.
-        default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        parts = state_partitions_for(input_rows, default)
-        if parts != default:
-            restore_parts = str(default)
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
+        set_conf(spark, "spark.sql.streaming.stateStore.providerClass", state_store_provider)
+    with QueryScope(spark) as start_scope:
+        if input_rows is not None:
+            # size state partitions to the bounded input
+            # (state_partitions_for rationale above); the conf is cloned
+            # into the query at start(), so restoring right after never
+            # touches the running stream. Each run gets a FRESH checkpoint
+            # (scratch cleared above), so the partition count frozen into
+            # the checkpoint can never conflict with a later run's choice.
+            default = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            parts = state_partitions_for(input_rows, default)
+            if parts != default:
+                start_scope.set_conf("spark.sql.shuffle.partitions", str(parts))
         q = (
             df.writeStream.outputMode(output_mode)
             .queryName(query_name)
@@ -277,9 +272,6 @@ def run_available_now_to_parquet(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        if restore_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", restore_parts)
     try:
         if self_terminates:
             if not q.awaitTermination(timeout_seconds):

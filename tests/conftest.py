@@ -22,3 +22,36 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+def assert_consumer_memo_evicts_oldest(spark, monkeypatch, consume, key) -> None:
+    """``consume()`` reaches its shared artifact through ``scope.memo``
+    under ``key``: with the memo full of older keys that each pin a
+    frame, the consumer's build evicts the OLDEST key (its frame is
+    unpersisted) and the newer ones survive, still pinned and cached.
+    The FIFO semantics themselves are tested once in tests/test_scope.py;
+    this checks that a consumer is routed through that one bounded memo."""
+    from hebrew_tutor_data_pipeline_spark import scope
+
+    scope.clear_memo()
+    monkeypatch.setattr(scope, "MEMO_BOUND", 4)
+    fakes = [
+        scope.memo(
+            spark,
+            ("fake", i),
+            lambda i=i: scope.pin(
+                spark.createDataFrame([(i, i)], "doc_id long, component_id long")
+            ),
+        )
+        for i in range(4)
+    ]
+    try:
+        consume()
+        assert not fakes[0].is_cached
+        assert all(f.is_cached for f in fakes[1:])
+        assert scope.memo(spark, ("fake", 0), lambda: "rebuilt") == "rebuilt"
+        for i in (2, 3):
+            assert scope.memo(spark, ("fake", i), lambda: pytest.fail("evicted")) is fakes[i]
+        assert scope.memo(spark, key, lambda: pytest.fail(f"{key} evicted")) is not None
+    finally:
+        scope.clear_memo()

@@ -24,15 +24,19 @@ SF = "/root/testdata/sf0.001"
 # plus any never-driver-validated entries that just rotated in — so
 # every oracled query is gated somewhere at every commit. (The r03 NTZ
 # regression slipped because the then-hand-maintained list missed
-# progress_running_eta; a computed complement cannot miss.)
+# progress_running_eta; a computed complement cannot miss.) An entry
+# whose oracle or plan changed since its last green (load_changed) counts
+# as never-validated: its green record predates the rewrite, so it is
+# gated here as well as in the window it is forced into.
 from hebrew_tutor_data_pipeline_spark.plans import (  # noqa: E402
     CATALOG,
     driver_window,
+    load_changed,
     load_last_green,
 )
 
 _window = set(driver_window())
-_green_ever = set(load_last_green())
+_green_ever = set(load_last_green()) - load_changed()
 PARITY_SUBSET = [
     n
     for n, s in CATALOG.items()

@@ -2457,27 +2457,34 @@ class TestExplodeNonempty:
                 assert "array_distinct" not in ls, ls
 
 
+def _memo_hit(spark, key):
+    """The memo's value for ``key``, failing the test if it is absent."""
+    from hebrew_tutor_data_pipeline_spark.scope import memo
+
+    return memo(spark, key, lambda: pytest.fail(f"memo miss for {key}"))
+
+
 class TestDedupClusterMemo:
     """The shared SimHash-clustering memo behind dedup_clusters /
     dedup_cluster_stats (catalog_ml._dedup_cluster_labels): one
-    connected-components run serves both entries, keyed per
-    (application, sf_dir) with FIFO eviction — the _BLOOM_SHARED
-    discipline applied to the #3/#5 catalog entries by sf0.1 cost."""
+    connected-components run serves both entries."""
 
     SF_SMOKE = "/root/testdata/sf0.001"
 
     def test_stats_consistent_with_clusters_and_memo_shared(self, spark):
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as ml
+        from hebrew_tutor_data_pipeline_spark.scope import clear_memo, memo
 
-        ml.clear_dedup_cluster_cache()
+        clear_memo()
+        key = ("dedup_cluster_labels", self.SF_SMOKE)
         clusters = ml.dedup_clusters(spark, self.SF_SMOKE).collect()
-        assert len(ml._DEDUP_LAB_SHARED) == 1
+        lab = _memo_hit(spark, key)
         stats = {
             r["cluster_size"]: (r["n_clusters"], r["n_docs"], r["n_dup_docs"])
             for r in ml.dedup_cluster_stats(spark, self.SF_SMOKE).collect()
         }
-        # the second entry rode the memo — no new key
-        assert len(ml._DEDUP_LAB_SHARED) == 1
+        # the second entry rode the memo — the same labeling, no rebuild
+        assert _memo_hit(spark, key) is lab
         # independent recomputation of the size distribution from the
         # parent entry's own output
         from collections import Counter
@@ -2492,36 +2499,27 @@ class TestDedupClusterMemo:
                 (size - 1) * n_clusters,
             )
         assert stats == expect
-        ml.clear_dedup_cluster_cache()
-        assert len(ml._DEDUP_LAB_SHARED) == 0
+        clear_memo()
+        assert memo(spark, key, lambda: "rebuilt") == "rebuilt"
+        clear_memo()
 
-    def test_memo_fifo_eviction_unpersists_oldest(self, spark):
+    def test_memo_fifo_eviction_unpersists_oldest(self, spark, monkeypatch):
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as ml
+        from tests.conftest import assert_consumer_memo_evicts_oldest
 
-        ml.clear_dedup_cluster_cache()
-        dummies = []
-        for i in range(4):
-            f = spark.createDataFrame(
-                [(i, i)], "doc_id long, component_id long"
-            ).persist()
-            f.count()
-            dummies.append(f)
-            ml._DEDUP_LAB_SHARED[("fake-app", f"dir{i}")] = f
-        ml._dedup_cluster_labels(spark, self.SF_SMOKE)
-        # one real key + at most 3 survivors; the OLDEST fake evicted
-        # and unpersisted, newest fakes still present
-        assert ("fake-app", "dir0") not in ml._DEDUP_LAB_SHARED
-        assert dummies[0].storageLevel.useMemory is False
-        assert len(ml._DEDUP_LAB_SHARED) <= 4
-        ml.clear_dedup_cluster_cache()
+        assert_consumer_memo_evicts_oldest(
+            spark,
+            monkeypatch,
+            lambda: ml._dedup_cluster_labels(spark, self.SF_SMOKE),
+            ("dedup_cluster_labels", self.SF_SMOKE),
+        )
+
 
 class TestBpeMergeMemo:
     """The shared BPE merge-table memo behind bpe_merge_rounds /
     bpe_encode_corpus / bpe_vocab_coverage (catalog_ml._bpe_merge_table):
     the three entries train the identical 3-round table, so one training
-    (three corpus-wide pair counts) serves all of them, keyed per
-    (application, sf_dir) with FIFO eviction — the _BLOOM_SHARED
-    discipline applied to a driver-side model artifact."""
+    (three corpus-wide pair counts) serves all of them."""
 
     SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -2529,32 +2527,35 @@ class TestBpeMergeMemo:
         from hebrew_tutor_data_pipeline_spark.operators import bpe
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as ml
         from hebrew_tutor_data_pipeline_spark.plans.catalog import T
+        from hebrew_tutor_data_pipeline_spark.scope import clear_memo, memo
         from hebrew_tutor_data_pipeline_spark.sources.readers import spread
 
-        ml.clear_bpe_merge_cache()
+        clear_memo()
+        key = ("bpe_merges", self.SF_SMOKE)
         memo_rows = sorted(
             map(tuple, ml.bpe_merge_rounds(spark, self.SF_SMOKE).collect())
         )
-        assert len(ml._BPE_MERGES_SHARED) == 1
-        # the encode entry rides the same memo — no new key, no retrain
+        table = _memo_hit(spark, key)
+        # the encode entry rides the same memo — no retrain
         ml.bpe_encode_corpus(spark, self.SF_SMOKE)
-        assert len(ml._BPE_MERGES_SHARED) == 1
+        assert _memo_hit(spark, key) is table
         # value check against an INDEPENDENT (memo-free) training
         d = spread(T(spark, self.SF_SMOKE, "documents"))
         fresh = sorted(
             map(tuple, bpe.bpe_merges(d, "doc_id", "text", rounds=3).collect())
         )
         assert memo_rows == fresh
-        ml.clear_bpe_merge_cache()
-        assert len(ml._BPE_MERGES_SHARED) == 0
+        clear_memo()
+        assert memo(spark, key, lambda: "rebuilt") == "rebuilt"
+        clear_memo()
 
-    def test_memo_fifo_eviction(self, spark):
+    def test_memo_fifo_eviction(self, spark, monkeypatch):
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as ml
+        from tests.conftest import assert_consumer_memo_evicts_oldest
 
-        ml.clear_bpe_merge_cache()
-        for i in range(4):
-            ml._BPE_MERGES_SHARED[("fake-app", f"dir{i}")] = []
-        ml._bpe_merge_table(spark, self.SF_SMOKE)
-        assert ("fake-app", "dir0") not in ml._BPE_MERGES_SHARED
-        assert len(ml._BPE_MERGES_SHARED) <= 4
-        ml.clear_bpe_merge_cache()
+        assert_consumer_memo_evicts_oldest(
+            spark,
+            monkeypatch,
+            lambda: ml._bpe_merge_table(spark, self.SF_SMOKE),
+            ("bpe_merges", self.SF_SMOKE),
+        )

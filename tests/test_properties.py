@@ -1980,15 +1980,17 @@ class TestLineDedupProperties:
 class TestBloomSharedBuild:
     def test_memo_shares_and_survives_unpersist(self, spark):
         """The Bloom pair's shared build (VERDICT r10 #7): the memo
-        returns the SAME persisted frames for both entries within one
-        application+sf_dir, and an external unpersist (scale_bench
-        hygiene) degrades to recompute — results stay identical,
-        because lineage is intact."""
+        returns the SAME pinned frames for both entries within one
+        application+sf_dir, and an external unpersist degrades to
+        recompute — results stay identical, because lineage is intact."""
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as cm
+        from hebrew_tutor_data_pipeline_spark.scope import clear_memo, memo
 
         sf = "/root/testdata/sf0.001"
+        clear_memo()
         p1 = cm._bloom_parts(spark, sf)
-        p2 = cm._bloom_parts(spark, sf)
+        # the certificate entry's lookup is a memo hit, not a rebuild
+        p2 = memo(spark, ("bloom_parts", sf), lambda: pytest.fail("rebuilt"))
         assert p1 is p2  # one build per (app, sf_dir)
         before = sorted(
             tuple(r)
@@ -2001,41 +2003,20 @@ class TestBloomSharedBuild:
             for r in cm.CATALOG["bloom_url_membership"].spark(spark, sf).collect()
         )
         assert before == after and len(before) > 0
+        clear_memo()
 
     def test_memo_evicts_oldest_not_newest(self, spark, monkeypatch):
         """Bounded-memo eviction must be FIFO (ADVICE r11): the old
-        dict.popitem() removed the MOST recently inserted entry, so once
-        4 keys accumulated the three oldest persisted frames were never
-        evictable and stayed pinned for the application lifetime."""
+        dict.popitem() removed the MOST recently inserted entry, so the
+        oldest pinned frames were never evictable. The Bloom build goes
+        through the one memo, so it evicts the oldest key, not the newest."""
         from hebrew_tutor_data_pipeline_spark.plans import catalog_ml as cm
+        from tests.conftest import assert_consumer_memo_evicts_oldest
 
-        class _Fake:
-            def __init__(self):
-                self.unpersisted = False
-
-            def unpersist(self):
-                self.unpersisted = True
-
-        fakes = {f"sf_fake_{i}": {"idx": _Fake(), "bits": _Fake()} for i in range(4)}
-        monkeypatch.setattr(
-            cm,
-            "_BLOOM_SHARED",
-            {
-                (spark.sparkContext.applicationId, k): dict(v)
-                for k, v in fakes.items()
-            },
+        sf = "/root/testdata/sf0.001"
+        assert_consumer_memo_evicts_oldest(
+            spark, monkeypatch, lambda: cm._bloom_parts(spark, sf), ("bloom_parts", sf)
         )
-        cm._bloom_parts(spark, "/root/testdata/sf0.001")
-        live = {k[1] for k in cm._BLOOM_SHARED}
-        assert "/root/testdata/sf0.001" in live
-        # FIFO: the single evicted key is the OLDEST fake, and its
-        # frames were unpersisted; the newer three survive untouched
-        assert "sf_fake_0" not in live
-        assert fakes["sf_fake_0"]["idx"].unpersisted
-        assert fakes["sf_fake_0"]["bits"].unpersisted
-        for i in (1, 2, 3):
-            assert f"sf_fake_{i}" in live
-            assert not fakes[f"sf_fake_{i}"]["idx"].unpersisted
 
 
 class TestBloomMembershipProperties:

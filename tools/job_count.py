@@ -3,8 +3,9 @@ fixed-overhead analysis (guide §1: know where the time goes before
 touching anything; on a steal-noisy host, job counts are the signal
 wall-clock is not).
 
-Each catalog query runs once inside its own job group; the number of
-jobs it launched is read from the status tracker. A query whose plan is
+Each catalog query runs once inside its own job group and its own
+QueryScope (so no entry rides a cache another entry left behind); the
+number of jobs it launched is read from the status tracker. A query whose plan is
 "one action" still pays one job per eager sub-step (knob counts,
 persist materializations, Lloyd passes, localCheckpoint rounds,
 streaming micro-batches) — at sf0.1 each such job costs ~0.2-0.5 s of
@@ -28,6 +29,7 @@ SF_DIR = "/root/testdata/sf0.1"
 
 def main() -> int:
     from hebrew_tutor_data_pipeline_spark.plans import CATALOG
+    from hebrew_tutor_data_pipeline_spark.scope import QueryScope
     from hebrew_tutor_data_pipeline_spark.session import get_spark
 
     names = sys.argv[1:]
@@ -50,8 +52,8 @@ def main() -> int:
         sc.setJobGroup(group, name)
         t0 = time.perf_counter()
         try:
-            df = spec.spark(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
+            with QueryScope(spark):
+                spec.spark(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         except Exception as exc:  # noqa: BLE001 — sweep must finish
             sc.setJobGroup(None, None)
             out[name] = {"error": f"{type(exc).__name__}: {exc}"[:200]}

@@ -225,6 +225,7 @@ def main() -> int:
 
     import bench
     from hebrew_tutor_data_pipeline_spark.plans import CATALOG
+    from hebrew_tutor_data_pipeline_spark.scope import QueryScope
     from hebrew_tutor_data_pipeline_spark.session import get_spark
 
     sf = bench.sf_of(sf_dir)
@@ -254,9 +255,14 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = spec.spark(spark, sf_dir)
-            scols = sdf.columns
-            n_spark = sdf.count()
+            # build plus every action in one scope: the entry's pins,
+            # conf changes and scratch go before the next entry runs
+            with QueryScope(spark):
+                sdf = spec.spark(spark, sf_dir)
+                scols = sdf.columns
+                n_spark = sdf.count()
+                if n_spark <= row_cap:
+                    srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {str(e)[:300]}")
@@ -317,12 +323,6 @@ def main() -> int:
                     f"(answer > PARITY_ROW_CAP={row_cap}; values pinned at "
                     f"lower SFs) ({time.time()-t0:.1f}s)"
                 )
-            continue
-        try:
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:
-            failures.append(name)
-            print(f"FAIL  {name}: spark error: {str(e)[:300]}")
             continue
         if spec.oracle is None:
             print(

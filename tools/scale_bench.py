@@ -28,6 +28,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from hebrew_tutor_data_pipeline_spark.plans import CATALOG  # noqa: E402
+from hebrew_tutor_data_pipeline_spark.scope import QueryScope, clear_memo  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.session import get_spark  # noqa: E402
 
 HEAVY = (
@@ -61,26 +62,6 @@ HEAVY = (
 #: and minhash_dedup_pairs_corpus is the banded tier of record — so the
 #: scale evidence and the driver-validated plans are the same code path.
 PROBES: dict = {}
-
-
-def clear_persisted(spark) -> int:
-    """Drop EVERY persisted RDD (incl. localCheckpoint blocks, which
-    catalog.clearCache() does not touch) so one query's failure can't
-    leak storage into the next measurement — the r06 first run showed
-    x30 numbers inflated by blocks a failed query left behind."""
-    sc = spark.sparkContext
-    n = 0
-    try:
-        it = sc._jsc.sc().getPersistentRDDs().iterator()
-        handles = []
-        while it.hasNext():
-            handles.append(it.next()._2())
-        for h in handles:
-            h.unpersist(False)
-            n += 1
-    except Exception as exc:  # noqa: BLE001 — best-effort hygiene
-        print(f"# clear_persisted failed: {exc}", file=sys.stderr)
-    return n
 
 
 def stage_metrics(ui: str) -> dict[int, dict]:
@@ -192,25 +173,21 @@ def main() -> int:
         for name, run_fn in runnables:
             t0 = time.perf_counter()
             try:
-                run_fn(spark, d).write.format("noop").mode("overwrite").save()
+                # the scope drops what the query pinned, even when it
+                # fails, so no query leaks storage into the next one
+                with QueryScope(spark):
+                    run_fn(spark, d).write.format("noop").mode("overwrite").save()
                 sec = round(time.perf_counter() - t0, 3)
                 err = None
             except Exception as exc:  # noqa: BLE001 — isolate per query
                 sec, err = None, f"{type(exc).__name__}: {exc}"[:300]
-            leaked = clear_persisted(spark)
-            if leaked:
-                print(f"# {label} {name}: cleared {leaked} persisted RDDs", file=sys.stderr)
             # each query pays its FULL model cost (codebook training
-            # included): without this, whichever _embeddings_codebook*
-            # consumer runs first absorbs training and the rest measure
-            # assignment only — the isolated numbers here are the
-            # cost-model evidence, unlike bench.py's in-catalog totals
-            # where the memo sharing is the deliberate production posture
-            from hebrew_tutor_data_pipeline_spark.plans.catalog_ml import (
-                clear_codebook_cache,
-            )
-
-            clear_codebook_cache()
+            # included): without this, whichever memo consumer runs
+            # first absorbs training and the rest measure assignment
+            # only — the isolated numbers here are the cost-model
+            # evidence, unlike bench.py's in-catalog totals where the
+            # memo sharing is the deliberate production posture
+            clear_memo()
             rec: dict = {"sec": sec}
             if err:
                 rec["error"] = err

@@ -33,9 +33,7 @@ def main() -> int:
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
     from hebrew_tutor_data_pipeline_spark.plans import CATALOG
-    from hebrew_tutor_data_pipeline_spark.plans.catalog_ml import (
-        clear_codebook_cache,
-    )
+    from hebrew_tutor_data_pipeline_spark.scope import clear_memo
     from hebrew_tutor_data_pipeline_spark.session import get_spark
 
     spark = get_spark("semdedup-adjudicate")
@@ -48,12 +46,12 @@ def main() -> int:
 
     # one unmeasured warmup so JVM/codegen/python-worker spin-up does
     # not land inside the first cold number (the r06 attribution class)
-    clear_codebook_cache()
+    clear_memo()
     run_once()
 
     cold, warm = [], []
     for _ in range(rounds):
-        clear_codebook_cache()
+        clear_memo()
         cold.append(run_once())
         warm.append(run_once())
 

@@ -61,18 +61,19 @@ def main() -> int:
         ui = spark.sparkContext.uiWebUrl
         spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
         from hebrew_tutor_data_pipeline_spark.plans import CATALOG
+        from hebrew_tutor_data_pipeline_spark.scope import QueryScope
 
         for name in QUERIES:
             seen = set(sb.stage_metrics(ui)) if ui else set()
             t0 = time.perf_counter()
             try:
-                CATALOG[name].spark(spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                with QueryScope(spark):
+                    CATALOG[name].spark(spark, d).write.format("noop").mode(
+                        "overwrite"
+                    ).save()
                 sec, err = round(time.perf_counter() - t0, 3), None
             except Exception as exc:  # noqa: BLE001 — isolate per cell
                 sec, err = None, f"{type(exc).__name__}: {exc}"[:200]
-            sb.clear_persisted(spark)
             rec: dict = {"sec": sec}
             if err:
                 rec["error"] = err
