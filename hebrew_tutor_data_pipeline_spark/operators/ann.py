@@ -316,12 +316,12 @@ def kmeans_codebook(
     Each iteration: centroids ship as an ``sc.broadcast`` matrix; the
     assignment stage is the same map-only numpy GEMM as ``ivf_topk``
     and COMBINES map-side — it emits one (cell, sum_vec, count) partial
-    per cell per partition, so the shuffle carries at most
-    ``partitions × k`` rows and a dominant cell (early Lloyd iterations
-    routinely collapse most points into few cells) never concentrates
-    raw vectors on one reducer. The merge weights the partials into the
-    new centroid; only the k×dim codebook is ever collected. Empty
-    cells keep their previous centroid. Returns
+    per cell per partition, so at most ``partitions × k`` rows reach the
+    driver (the codebook's own bound) and no raw vector ever leaves its
+    task, however dominant a cell (early Lloyd iterations routinely
+    collapse most points into few cells). The driver weights the
+    partials into the new centroids. Empty cells keep their previous
+    centroid. Returns
     ``[(cell_id, centroid_vector), ...]`` feedable to
     ``ivf_topk(codebook=...)``.
     """
@@ -392,29 +392,20 @@ def kmeans_codebook(
                         }
                     )
 
-            partials = c.mapInPandas(assign_partials, partial_schema)
-
-            # merge ≤ partitions×k tiny partials into k centroids. Partials
-            # arrive in SHUFFLE order — float addition is order-sensitive,
-            # so sum them sorted by their source partition id or the same
-            # corpus on the same splits could yield 1-ulp-different
-            # centroids across runs (bit-exactness contract).
-            def cell_mean(pdf: "pd.DataFrame") -> "pd.DataFrame":
-                pdf = pdf.sort_values("pid")
-                s = np.stack(pdf["psum"].to_numpy()).sum(axis=0)
-                n = int(pdf["n"].sum())
-                return pd.DataFrame(
-                    {"cell": [int(pdf["cell"].iloc[0])], "vec": [list(s / n)]}
-                )
-
-            means = (
-                partials.groupBy("cell")
-                .applyInPandas(cell_mean, "cell long, vec array<double>")
-                .collect()
-            )
+            # merge the ≤ partitions×k partials into k centroids on the
+            # driver: the codebook's own bound, so no reduce stage is
+            # needed. Float addition is order-sensitive, so each cell's
+            # partials are summed sorted by their source partition id:
+            # the same corpus on the same splits yields bit-identical
+            # centroids across runs.
+            by_cell: dict[int, list] = {}
+            for r in c.mapInPandas(assign_partials, partial_schema).collect():
+                by_cell.setdefault(r["cell"], []).append(r)
             new_cent = cent.copy()  # empty cells keep their previous centroid
-            for r in means:
-                new_cent[r["cell"], :] = np.asarray(r["vec"], dtype="float64")
+            for cell, rows in by_cell.items():
+                rows.sort(key=lambda r: r["pid"])
+                s = np.stack([np.asarray(r["psum"], dtype="float64") for r in rows])
+                new_cent[cell, :] = s.sum(axis=0) / sum(r["n"] for r in rows)
             cent = new_cent
     return [(i, [float(x) for x in cent[i]]) for i in range(k)]
 
@@ -682,6 +673,8 @@ def two_level_codebook(
 
             partials = assigned.mapInPandas(fine_partials, partial_schema)
 
+            # a distributed reduce, unlike kmeans_codebook's driver merge:
+            # Σ fine_k grows with n, and the partial count with it
             def cell_mean(pdf: "pd.DataFrame") -> "pd.DataFrame":
                 # partial sums ordered by source partition id — the same
                 # bit-exactness contract as kmeans_codebook's merge

@@ -872,8 +872,6 @@ def streaming_terminal_job_status(spark: SparkSession, sf_dir: str) -> DataFrame
         output_mode="append",
         query_name="terminal_job_status_stream",
         input_rows=parquet_num_rows(sf_dir, "events"),
-        # timeout-bearing state keeps the query alive; drain-and-stop
-        self_terminates=False,
     )
 
 

@@ -197,13 +197,50 @@ def state_partitions_for(input_rows: int, default: int) -> int:
     return min(default, max(4, math.ceil(input_rows / STATE_TARGET_ROWS_PER_PARTITION)))
 
 
+def keeps_no_data_batches(df: DataFrame, output_mode: str) -> bool:
+    """Whether a no-data micro-batch of the stream ``df`` could emit a
+    row, read from its analyzed plan (zero jobs). Only a watermark
+    advance with no new input can close something, and only these
+    streaming nodes emit on a close: an ``Aggregate`` outside
+    ``complete`` mode (windows finalized by the watermark), a
+    stream-stream ``Join`` that is not ``Inner`` (outer/semi rows
+    emitted at state eviction), a ``*WithState`` node with
+    ``EventTimeTimeout`` and any ``TransformWithState*`` node (timers).
+    Everything else — complete-mode aggregates, dedup, inner joins,
+    stateless plans — only evicts state in such a batch.
+
+    A processing-time timeout fires only in the batches that follow the
+    data, so a stream holding one would never finish under
+    ``availableNow`` unless its no-data batches are dropped; a plan that
+    has one AND needs its no-data batches raises ``ValueError``."""
+    nodes = [df._jdf.queryExecution().analyzed()]
+    for node in nodes:  # grows while iterated: walks the whole tree
+        kids = node.children()
+        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    keep = processing_timeout = False
+    for node in (n for n in nodes if n.isStreaming()):
+        name = node.getClass().getSimpleName()
+        if name.startswith("TransformWithState"):
+            keep = True
+        elif name.endswith("WithState"):
+            timeout = node.timeout().toString()
+            keep |= timeout == "EventTimeTimeout"
+            processing_timeout |= timeout == "ProcessingTimeTimeout"
+        elif name == "Aggregate":
+            keep |= output_mode != "complete"
+        elif name == "Join" and node.left().isStreaming() and node.right().isStreaming():
+            keep |= node.joinType().toString() != "Inner"
+    if keep and processing_timeout:
+        raise ValueError("processing-time timeout + no-data batches: would never finish")
+    return keep
+
+
 def run_available_now_to_parquet(
     df: DataFrame,
     scratch_key: str,
     output_mode: str,
     query_name: str,
     timeout_seconds: int = 600,
-    self_terminates: bool = True,
     state_store_provider: str | None = ROCKSDB_PROVIDER,
     input_rows: int | None = None,
 ) -> DataFrame:
@@ -226,27 +263,35 @@ def run_available_now_to_parquet(
     output dir (the returned frame is lazy) stays readable until the
     current ``QueryScope`` closes, or for the session outside one. The
     state-store provider conf is restored by that scope too, and the
-    state-partition override right after ``start()``. A production deployment swaps the sink body for its real
+    state-partition override right after ``start()``.
+
+    The trailing no-data micro-batch (run after the data to apply the
+    advanced watermark) is kept only where it can emit a row — see
+    ``keeps_no_data_batches``: append-mode aggregates, non-inner
+    stream-stream joins, event-time timeouts and transformWithState.
+    Every other stream runs its data batches alone; the skipped batch
+    would only evict state into a checkpoint deleted right after the
+    run. Skipping it took the user-keyed interval join's median from
+    2.92 to 2.13 s on a 4-core VM (bench_runs/r16_no_dead_rounds_ab.json).
+    The returned frame is the output of the batches that ran. A
+    processing-time-timeout stream therefore ends by itself under
+    availableNow, before any timeout can fire a nondeterministic late
+    row. A production deployment swaps the sink body for its real
     writer; the plan above it is unchanged."""
     import shutil
     from pathlib import Path
 
+    keep_no_data = keeps_no_data_batches(df, output_mode)
     spark = df.sparkSession
     _sweep_stale_scratch(spark.sparkContext.applicationId)
     work = scratch(spark, f"stream_{query_name}") / scratch_key
     shutil.rmtree(work, ignore_errors=True)
     out = str(work / "out")
     ckpt = str(work / "ckpt")
-    empty = spark.createDataFrame([], df.schema)
-    if output_mode == "complete":
 
-        def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(out)
-
-    else:
-
-        def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(f"{out}/batch_id={batch_id}")
+    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        path = out if output_mode == "complete" else f"{out}/batch_id={batch_id}"
+        batch_df.write.mode("overwrite").parquet(path)
 
     if state_store_provider:
         # session conf is captured per-query at start — affects only
@@ -264,6 +309,8 @@ def run_available_now_to_parquet(
             parts = state_partitions_for(input_rows, default)
             if parts != default:
                 start_scope.set_conf("spark.sql.shuffle.partitions", str(parts))
+        if not keep_no_data:
+            start_scope.set_conf("spark.sql.streaming.noDataMicroBatches.enabled", "false")
         q = (
             df.writeStream.outputMode(output_mode)
             .queryName(query_name)
@@ -273,42 +320,8 @@ def run_available_now_to_parquet(
             .start()
         )
     try:
-        if self_terminates:
-            if not q.awaitTermination(timeout_seconds):
-                raise TimeoutError(f"{query_name}: stream did not finish")
-        else:
-            # Stateful operators holding processing-time timeouts never
-            # self-terminate even under availableNow — the engine keeps
-            # triggering batches so pending timeouts can fire (see
-            # tests/test_streaming.run_available_now). Drain: once a
-            # triggered batch consumed 0 input rows after the data
-            # batch, every data-driven emission has been committed and
-            # the query is stopped BEFORE any processing-time timeout
-            # could fire a nondeterministic late row.
-            import time as _time
-
-            deadline = _time.time() + timeout_seconds
-            drained = False
-            while _time.time() < deadline and q.isActive:
-                prog = q.lastProgress
-                if prog and prog.get("batchId", 0) > 0 and prog.get("numInputRows") == 0:
-                    drained = True
-                    break
-                # 50 ms poll: every post-data batch is empty, so the first
-                # progress with 0 input IS the drain signal — at 0.5 s the
-                # poll itself added up to half a second of pure latency to
-                # every non-self-terminating stream (guide §1: fixed
-                # overhead a query can never go below).
-                _time.sleep(0.05)
-            if q.exception() is not None:
-                # a dead query exits the loop with isActive False — that
-                # is a FAILURE, not a drain; silently returning the
-                # pre-committed empty/partial parquet would be a wrong
-                # answer (the self_terminates path re-raises via
-                # awaitTermination, this path must too)
-                raise q.exception()
-            if not drained and q.isActive:
-                raise TimeoutError(f"{query_name}: stream never drained")
+        if not q.awaitTermination(timeout_seconds):
+            raise TimeoutError(f"{query_name}: stream did not finish")
     finally:
         q.stop()
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -322,10 +335,7 @@ def run_available_now_to_parquet(
     # batches are unchanged: a batch (even a 0-row one) writes part
     # files, which the glob sees.
     if not any(Path(out).rglob("*.parquet")):
-        if output_mode == "complete":
-            empty.write.mode("overwrite").parquet(out)
-        else:
-            empty.write.mode("overwrite").parquet(f"{out}/batch_id=-1")
+        _write_batch(spark.createDataFrame([], df.schema), -1)
     # Append mode lays batches out as batch_id=<id> partition dirs; drop
     # the discovered partition column to restore the plan's schema
     # (drop() of an absent column — the complete-mode case — is a no-op).

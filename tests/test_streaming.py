@@ -39,7 +39,7 @@ def events_dir(spark, tmp_path_factory):
     return str(d / "in")
 
 
-def run_available_now(df, out_table: str, mode: str = "append", self_terminates: bool = True):
+def run_available_now(df, out_table: str, mode: str = "append"):
     q = (
         df.writeStream.format("memory")
         .queryName(out_table)
@@ -48,34 +48,8 @@ def run_available_now(df, out_table: str, mode: str = "append", self_terminates:
         .option("checkpointLocation", f"/tmp/ckpt-{out_table}-{uuid.uuid4().hex}")
         .start()
     )
-    if self_terminates:
-        assert q.awaitTermination(120), "stream did not finish within 120s"
-        return q
-    # Stateful operators with processing-time timeouts never
-    # self-terminate even under availableNow (the engine keeps
-    # triggering batches to fire timeouts, so it never reads as idle
-    # either, and processAllAvailable hangs) — a bare awaitTermination
-    # would silently burn its whole timeout and leak a running query
-    # (the old behavior). Wait until the OUTPUT stabilizes: nonzero and
-    # unchanged across two 1 s checks — then stop.
-    deadline = time.time() + 120
-    prev = -1
-    while time.time() < deadline and q.isActive:
-        n = spark_table_count(df.sparkSession, out_table)
-        if n > 0 and n == prev:
-            break
-        prev = n
-        time.sleep(1.0)
-    q.stop()
-    assert q.awaitTermination(60), "stream did not stop within 60s"
+    assert q.awaitTermination(120), "stream did not finish within 120s"
     return q
-
-
-def spark_table_count(spark, name: str) -> int:
-    try:
-        return spark.table(name).count()
-    except Exception:  # first trigger hasn't registered the sink table yet
-        return 0
 
 
 class TestTumbling:
@@ -180,6 +154,10 @@ class TestSessionWindows:
 
 class TestStatefulPolling:
     def test_terminal_jobs_emitted_once(self, spark, tmp_path):
+        from hebrew_tutor_data_pipeline_spark.streaming.sources import (
+            run_available_now_to_parquet,
+        )
+
         rows = [
             ("job1", "Running", "2024-01-01T00:00:00"),
             ("job1", "Running", "2024-01-01T00:00:05"),
@@ -196,14 +174,14 @@ class TestStatefulPolling:
         stream = spark.readStream.schema(
             "job_id string, status string, ts timestamp"
         ).parquet(str(src))
-        out = terminal_jobs(stream)
-        name = f"jobs_{uuid.uuid4().hex[:8]}"
-        # the timeout-bearing stateful query stays alive to fire
-        # timeouts — drain to idle and stop instead of awaiting
-        run_available_now(out, name, self_terminates=False)
+        # the stream runner skips the no-data batches, so the
+        # timeout-bearing stateful query ends by itself
         got = {
             r["job_id"]: (r["final_status"], r["n_updates"])
-            for r in spark.table(name).collect()
+            for r in run_available_now_to_parquet(
+                terminal_jobs(stream), scratch_key=uuid.uuid4().hex[:8],
+                output_mode="append", query_name="terminal_jobs_test",
+            ).collect()
         }
         assert got == {"job1": ("Succeeded", 3), "job2": ("Failed", 2)}
         # job3 never reached a terminal state -> no emission
@@ -803,6 +781,151 @@ class TestCatalogStreamingEntries:
         )
         assert got.count() == 0
         assert got.columns == ["event_id", "value"]
+
+
+class TestNoDataBatchGate:
+    """streaming.sources.keeps_no_data_batches: the runner keeps the
+    trailing no-data micro-batch only for plans where it can emit a row;
+    every other stream runs its data batches alone."""
+
+    def test_catalog_streams_skip_the_no_data_batch(self, spark, monkeypatch):
+        from hebrew_tutor_data_pipeline_spark.plans import CATALOG
+        from hebrew_tutor_data_pipeline_spark.streaming import sources
+
+        class Captured(Exception):
+            pass
+
+        seen = {}
+
+        def capture(df, scratch_key, output_mode, query_name, **kw):
+            seen[query_name] = sources.keeps_no_data_batches(df, output_mode)
+            raise Captured
+
+        monkeypatch.setattr(sources, "run_available_now_to_parquet", capture)
+        names = [n for n in CATALOG if n.startswith("streaming_")]
+        for name in names:
+            with pytest.raises(Captured):
+                CATALOG[name].spark(spark, SF)
+        assert len(names) == len(seen) == 10
+        assert not any(seen.values()), seen
+
+    def test_plans_that_can_emit_keep_it(self, spark):
+        import pandas as pd
+        from pyspark.sql.streaming.state import GroupStateTimeout
+
+        from hebrew_tutor_data_pipeline_spark.streaming.polling import (
+            terminal_jobs_tws,
+        )
+        from hebrew_tutor_data_pipeline_spark.streaming.sources import (
+            events_parquet_stream,
+            keeps_no_data_batches,
+        )
+
+        ev = events_parquet_stream(spark, SF)
+        wm = ev.withWatermark("ts", "10 minutes")
+        tumbling = tumbling_window_stats(ev, window_duration="1 hour")
+        left_outer = wm.alias("a").join(
+            events_parquet_stream(spark, SF)
+            .withWatermark("ts", "10 minutes")
+            .alias("b"),
+            F.expr(
+                "a.user_id = b.user_id AND a.ts >= b.ts"
+                " AND a.ts <= b.ts + INTERVAL 1 HOUR"
+            ),
+            "left_outer",
+        )
+
+        def emit_key(key, pdfs, state):
+            yield pd.DataFrame({"user_id": [key[0]]})
+
+        event_time = wm.groupBy("user_id").applyInPandasWithState(
+            emit_key, "user_id long", "n long", "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+        updates = ev.select(
+            F.col("user_id").cast("string").alias("job_id"),
+            F.col("event_type").alias("status"),
+            "ts",
+        )
+        assert keeps_no_data_batches(tumbling, "append")
+        assert not keeps_no_data_batches(tumbling, "complete")
+        assert keeps_no_data_batches(left_outer, "append")
+        assert keeps_no_data_batches(event_time, "append")
+        assert keeps_no_data_batches(terminal_jobs_tws(updates), "append")
+
+    def test_processing_timeout_that_needs_no_data_batches_raises(self, spark):
+        from hebrew_tutor_data_pipeline_spark.streaming.sources import (
+            events_parquet_stream,
+            run_available_now_to_parquet,
+        )
+
+        updates = events_parquet_stream(spark, SF).select(
+            F.col("user_id").cast("string").alias("job_id"),
+            F.col("event_type").alias("status"),
+            "ts",
+        )
+        per_status = terminal_jobs(updates).groupBy("final_status").count()
+        with pytest.raises(ValueError, match="never finish"):
+            run_available_now_to_parquet(
+                per_status, scratch_key="gate_raise", output_mode="append",
+                query_name="gate_raise_test",
+            )
+        assert all(q.name != "gate_raise_test" for q in spark.streams.active)
+
+    def test_append_window_aggregate_emits_windows_closed_by_final_watermark(self, spark):
+        from hebrew_tutor_data_pipeline_spark.streaming.sources import (
+            events_parquet_stream,
+            run_available_now_to_parquet,
+        )
+
+        got = run_available_now_to_parquet(
+            tumbling_window_stats(
+                events_parquet_stream(spark, SF), window_duration="1 hour"
+            ),
+            scratch_key="gate_append_tumble",
+            output_mode="append",
+            query_name="gate_append_tumble_test",
+        )
+        got = {(r["window_start"], r["n_events"], r["sum_value"]) for r in got.collect()}
+        ev = load_table(spark, SF, "events")
+        cutoff = ev.agg(F.max("ts") - F.expr("INTERVAL 10 MINUTES")).first()[0]
+        want = {
+            (r["window"]["start"], r["n"], r["s"])
+            for r in ev.groupBy(F.window("ts", "1 hour"))
+            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("s"))
+            .collect()
+            if r["window"]["end"] <= cutoff
+        }
+        assert got == want and len(got) > 0
+
+    def test_user_keyed_join_runs_one_batch_and_equals_its_oracle(self, spark):
+        import duckdb
+
+        from hebrew_tutor_data_pipeline_spark.plans import CATALOG
+        from tools.parity import table_hash
+
+        spec = CATALOG["streaming_user_clicks_purchase_windows"]
+        listener = CountingListener()
+        spark.streams.addListener(listener)
+        try:
+            got = spec.spark(spark, SF)
+            deadline = time.time() + 30
+            while not listener.terminated and time.time() < deadline:
+                time.sleep(0.1)  # listener events are async
+        finally:
+            spark.streams.removeListener(listener)
+        batches = [
+            p for p in listener.progress
+            if p["name"] == "user_clicks_purchase_join_stream"
+        ]
+        assert [p["batchId"] for p in batches] == [0]
+        con = duckdb.connect()
+        con.execute(f"CREATE VIEW events AS SELECT * FROM '{SF}/events.parquet'")
+        cur = con.execute(spec.oracle)
+        want, cols = cur.fetchall(), [d[0] for d in cur.description]
+        rows = [tuple(r) for r in got.collect()]
+        assert len(rows) == len(want) > 0
+        assert table_hash(rows, got.columns) == table_hash(want, cols)
 
 
 class TestScratchSweep:
