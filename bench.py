@@ -5,22 +5,41 @@ JSON line: {"metric", "value", "unit", "queries": {name: sec}, "sf"}.
 Each query executes its complete plan into Spark's `noop` sink so column
 pruning cannot shortcut the measured work (a bare .count() would let
 Catalyst drop every projection).
+
+Each entry runs through `metrics.run_entry` in a session that writes an
+uncompressed event log to a temporary directory; after `spark.stop()`
+`metrics.fold` reads it once and the directory is removed. The two
+sidecars (bench_runs/BENCH_last.json, BENCH_last_c{cpus}.json) hold the
+stdout line's fields plus `cpus` and `records`: {name: record} for every
+entry run, errored ones included. A record holds `error` (null or the
+message), `wall_s` (the timing on stdout), `build_s` (plan build, which
+includes eager pins and whole streams), `exec_s` (the noop write),
+`job_ids` ([first, end) job ids), `jobs`, `stages`, `tasks`,
+`failed_tasks`, `executor_cpu_s`, `gc_s`, `shuffle_read_mb`,
+`shuffle_write_mb`, `spill_mb`, `input_mb`, `output_mb`,
+`peak_execution_mb`, and for streams `batches`, `trigger_ms`,
+`add_batch_ms`, `state_commit_ms`, `state_rows` (field meanings: the
+`metrics` module docstring). Both stdout lines are unchanged by this.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
-import time
+import tempfile
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from hebrew_tutor_data_pipeline_spark.plans import (  # noqa: E402
-    CATALOG,
-    REGISTRATION_ORDER,
+from hebrew_tutor_data_pipeline_spark.metrics import (  # noqa: E402
+    ProgressListener,
+    event_log_conf,
+    fold,
+    run_entry,
 )
+from hebrew_tutor_data_pipeline_spark.plans import REGISTRATION_ORDER  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.scope import QueryScope  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.session import get_spark  # noqa: E402
 
@@ -78,9 +97,18 @@ SCALE_TIER_SKIPS: dict[str, tuple[float, str]] = {
 
 
 def main() -> int:
+    # not an htdp_* name: the stream runner sweeps those as stale scratch
+    log_dir = tempfile.mkdtemp(prefix="bench_eventlog_")
+    try:
+        return run(log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
+
+
+def run(log_dir: str) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     only = set(sys.argv[1:])
-    spark = get_spark("bench")
+    spark = get_spark("bench", extra_conf=event_log_conf(log_dir))
     spark.sparkContext.setLogLevel("ERROR")
 
     # Warmup: exercise every engine path the catalog uses — JVM JIT,
@@ -310,9 +338,11 @@ def main() -> int:
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     skipped: dict[str, str] = {}
+    records: list[dict] = []
+    listener = ProgressListener()
+    spark.streams.addListener(listener)
     sf = sf_of(sf_dir)
     for name in REGISTRATION_ORDER:
-        spec = CATALOG[name]
         if only and name not in only:
             continue
         lim = SCALE_TIER_SKIPS.get(name)
@@ -327,15 +357,14 @@ def main() -> int:
             skipped[name] = lim[1]
             print(f"# {name}: SKIPPED at sf{sf:g} — {lim[1]}", file=sys.stderr)
             continue
-        t0 = time.perf_counter()
-        try:
-            with QueryScope(spark):
-                spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            print(f"# {name}: {timings[name]:.2f}s", file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001 — isolate, record, continue
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+        rec = run_entry(spark, name, sf_dir, listener)
+        records.append(rec)
+        if rec["error"]:
+            errors[name] = rec["error"]
             print(f"# {name}: ERROR {errors[name].splitlines()[0]}", file=sys.stderr)
+        else:
+            timings[name] = rec["wall_s"]
+            print(f"# {name}: {timings[name]:.2f}s", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
     out = {
@@ -366,22 +395,6 @@ def main() -> int:
     #      skips, plus the slowest timings that fit, explicitly flagged
     #      truncated with a pointer to the sidecar.
     print(json.dumps(out))
-    # Two sidecar names: BENCH_last.json (the historical path every tool
-    # reads) AND a per-core-count BENCH_last_c{N}.json — VERDICT r13 #5:
-    # the driver's 8-core scaling run clobbered the 32-core full map,
-    # making the canonical run's per-query record unrecoverable. With the
-    # core count in the name, runs at different widths never overwrite
-    # each other's full map.
-    out["cpus"] = int(
-        os.environ.get("SPARK_GRAFT_CPUS", spark.sparkContext.defaultParallelism)
-    )
-    bench_dir = Path(__file__).resolve().parent / "bench_runs"
-    for fname in ("BENCH_last.json", f"BENCH_last_c{out['cpus']}.json"):
-        try:
-            bench_dir.mkdir(parents=True, exist_ok=True)
-            (bench_dir / fname).write_text(json.dumps(out, indent=1) + "\n")
-        except OSError as exc:
-            print(f"# sidecar write failed ({fname}): {exc}", file=sys.stderr)
     compact = {
         "metric": out["metric"],
         "value": total,
@@ -405,7 +418,29 @@ def main() -> int:
         compact["queries_truncated"] = False
         del compact["queries_full"]
     print(json.dumps(compact, separators=(",", ":")))
+    out["cpus"] = int(
+        os.environ.get("SPARK_GRAFT_CPUS", spark.sparkContext.defaultParallelism)
+    )
+    # stopping the session flushes the event log that fold() reads
     spark.stop()
+    try:
+        fold(log_dir, records)
+    except Exception as exc:  # noqa: BLE001 — the records then lack engine fields
+        print(f"# event-log fold failed: {exc}", file=sys.stderr)
+    out["records"] = {rec.pop("name"): rec for rec in records}
+    # Two sidecar names: BENCH_last.json (the historical path every tool
+    # reads) AND a per-core-count BENCH_last_c{N}.json — VERDICT r13 #5:
+    # an 8-core scaling run clobbered the 32-core full map,
+    # making the canonical run's per-query record unrecoverable. With the
+    # core count in the name, runs at different widths never overwrite
+    # each other's full map.
+    bench_dir = Path(__file__).resolve().parent / "bench_runs"
+    for fname in ("BENCH_last.json", f"BENCH_last_c{out['cpus']}.json"):
+        try:
+            bench_dir.mkdir(parents=True, exist_ok=True)
+            (bench_dir / fname).write_text(json.dumps(out, indent=1) + "\n")
+        except OSError as exc:
+            print(f"# sidecar write failed ({fname}): {exc}", file=sys.stderr)
     return 0
 
 

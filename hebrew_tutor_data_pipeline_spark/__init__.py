@@ -21,6 +21,8 @@ ETL project, re-expressed Spark-first:
                    event-shaped mechanisms (SURVEY.md §2.10).
 - ``scope``      — ``QueryScope``: the one owner of an entry's pins, conf
                    changes and scratch dirs, plus the shared memo.
+- ``metrics``    — the per-entry measurement record harnesses write:
+                   wall/build/exec split, jobs by id range, event-log fold.
 
 Everything is DataFrame-declarative so Catalyst handles pruning, pushdown,
 folding, join strategy, and AQE; Python touches data only inside

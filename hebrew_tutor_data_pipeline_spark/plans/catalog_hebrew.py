@@ -336,8 +336,9 @@ def verse_at_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join (book, chapter, bin) against the binned word intervals,
     re-check containment, keep the first match in verse order. With a
     literal probe the bin folds to a constant and prunes the interval
-    scan — the sub-second serving path (tools/point_lookup_latency.py
-    measures it against a partitioned serving layout)."""
+    scan — the sub-second serving path (bench_runs/r08_point_lookup.json
+    measured it against a partitioned serving layout; perfbench's traced
+    chapter_align run measures it as ``lookup.*``)."""
     words = corpus_word_spread(spark, sf_dir)
     dur = words.groupBy("book", "chapter").agg(
         F.floor(F.max("word_end") * 100 + F.lit(0.5)).cast("long").alias("dur_centi")

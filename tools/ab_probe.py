@@ -2,12 +2,14 @@
 `python bench.py <query>` in a FRESH process per trial (cold session —
 the driver's measurement condition), alternating between the working
 tree and nothing (same tree twice = noise floor), and print each trial's
-wall seconds plus job count context.
+wall seconds, job count and executor CPU seconds, read from the entry's
+record in bench_runs/BENCH_last.json.
 
 The host shows hypervisor steal (identical code 64.9 vs 128.8 s twenty
 minutes apart, r13), so single runs prove nothing: evidence is the
-MEDIAN of ≥3 fresh-session trials, and a change is only claimed when
-the medians separate beyond the trial spread.
+MEDIAN of ≥3 fresh-session trials, and a speed-up is only claimed when
+all three signals agree — median wall, median jobs and median executor
+CPU — and the wall medians separate beyond the trial spread.
 
 Usage: python tools/ab_probe.py <query> [trials=3] [cpus=32]
 """
@@ -24,7 +26,8 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 
-def trial(name: str, cpus: int) -> float:
+def trial(name: str, cpus: int) -> dict:
+    """The entry's record from one fresh `python bench.py <name>`."""
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
     r = subprocess.run(
         [sys.executable, str(REPO / "bench.py"), name],
@@ -36,25 +39,31 @@ def trial(name: str, cpus: int) -> float:
     )
     if r.returncode != 0:
         raise RuntimeError(f"bench rc={r.returncode}: {r.stderr[-1500:]}")
-    line = r.stdout.strip().splitlines()[0]
-    doc = json.loads(line)
+    doc = json.loads((REPO / "bench_runs" / "BENCH_last.json").read_text())
     if doc.get("errors"):
         raise RuntimeError(f"query errored: {doc['errors']}")
-    return doc["queries"][name]
+    return doc["records"][name]
 
 
 def main() -> int:
     name = sys.argv[1]
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     cpus = int(sys.argv[3]) if len(sys.argv) > 3 else 32
-    vals = []
+    recs = []
     for i in range(trials):
-        v = trial(name, cpus)
-        vals.append(v)
-        print(f"trial {i + 1}: {v:.3f}s", flush=True)
+        rec = trial(name, cpus)
+        recs.append(rec)
+        print(
+            f"trial {i + 1}: {rec['wall_s']:.3f}s, {rec['jobs']} jobs, "
+            f"{rec['executor_cpu_s']:.2f}s executor CPU",
+            flush=True,
+        )
+    walls = [r["wall_s"] for r in recs]
     print(
-        f"{name} @ {cpus} cores: median {statistics.median(vals):.3f}s, "
-        f"min {min(vals):.3f}s, max {max(vals):.3f}s over {trials} trials"
+        f"{name} @ {cpus} cores over {trials} trials: median wall "
+        f"{statistics.median(walls):.3f}s (min {min(walls):.3f}s, max {max(walls):.3f}s), "
+        f"median jobs {statistics.median(r['jobs'] for r in recs):g}, median executor CPU "
+        f"{statistics.median(r['executor_cpu_s'] for r in recs):.2f}s"
     )
     return 0
 

@@ -1,8 +1,9 @@
 """Scale-evidence runner (VERDICT r04 'what's missing' #2): run the
 heavy dedup/ANN tier at sf0.1 and at the ×K corpora produced by
-tools/make_scale_data.py, record wall time + Spark stage metrics
-(shuffle read/write bytes, spill) per query per scale, and fit a
-log-log scaling exponent per query.
+tools/make_scale_data.py, record one `metrics.run_entry` record per
+query per scale (wall time, jobs, executor CPU, shuffle read/write,
+spill, ... folded from the session's event log), and fit a log-log
+scaling exponent per query.
 
 A query whose runtime fits t ∝ n^e with e ≈ 1 (and zero spill) is
 measured evidence that its plan shape survives scale-up; e >> 1 or
@@ -20,16 +21,25 @@ from __future__ import annotations
 
 import json
 import math
+import shutil
 import sys
-import time
-import urllib.request
+import tempfile
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from hebrew_tutor_data_pipeline_spark.metrics import (  # noqa: E402
+    ProgressListener,
+    event_log_conf,
+    fold,
+    run_entry,
+)
 from hebrew_tutor_data_pipeline_spark.plans import CATALOG  # noqa: E402
-from hebrew_tutor_data_pipeline_spark.scope import QueryScope, clear_memo  # noqa: E402
+from hebrew_tutor_data_pipeline_spark.scope import clear_memo  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.session import get_spark  # noqa: E402
+from hebrew_tutor_data_pipeline_spark.streaming.sources import (  # noqa: E402
+    parquet_num_rows,
+)
 
 HEAVY = (
     # jaccard_token_pairs (the exhaustive truth arm) is deliberately
@@ -52,56 +62,6 @@ HEAVY = (
     "ann_pq_top10",
     "embedding_outlier_scores",
 )
-
-
-#: Extra non-catalog probes. EMPTY since round 7: the r06 `*_scaled`
-#: parameterizations (SemDeDup k ∝ n, SRP-LSH bits ≈ log2(n/250)) and
-#: the corpus MinHash tier are now the REGISTERED queries themselves —
-#: semantic_dedup_flags / embedding_near_dup_lsh derive their blocking
-#: knobs from a corpus count inside the plan (oracle-mirrored formulas),
-#: and minhash_dedup_pairs_corpus is the banded tier of record — so the
-#: scale evidence and the driver-validated plans are the same code path.
-PROBES: dict = {}
-
-
-def stage_metrics(ui: str) -> dict[int, dict]:
-    """All completed stages from the Spark UI REST API, by stageId+attempt."""
-    try:
-        apps = json.load(
-            urllib.request.urlopen(f"{ui}/api/v1/applications", timeout=10)
-        )
-        app_id = apps[0]["id"]
-        stages = json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app_id}/stages?status=complete",
-                timeout=30,
-            )
-        )
-    except Exception as exc:  # noqa: BLE001 — metrics are best-effort
-        print(f"# stage metrics unavailable: {exc}", file=sys.stderr)
-        return {}
-    return {
-        (s["stageId"], s["attemptId"]): s
-        for s in stages
-        if isinstance(s, dict)
-    }
-
-
-def docs_count(spark, sf_dir: str) -> int:
-    import os
-
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
-
-
-def events_count(spark, sf_dir: str) -> int:
-    """Events-axis size for the scaled-events family (r10): in the
-    regenerated x{K} trees BOTH documents and events grow ∝ K, so the
-    log-log exponent fitted against n_docs is identical to one fitted
-    against n_events — this is recorded so the report shows the real
-    axis for event-shaped probes."""
-    import os
-
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet")).count()
 
 
 def fit_exponent(points: list[tuple[float, float]]) -> float | None:
@@ -146,76 +106,44 @@ def main() -> int:
         cc_last_rounds,
     )
 
-    # UI on: the REST API is where shuffle/spill stage metrics come from
-    spark = get_spark("scale-bench", extra_conf={"spark.ui.enabled": "true"})
-    spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-
-    # JVM/Python-worker warmup (not measured)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
+    log_dir = tempfile.mkdtemp(prefix="scale_bench_eventlog_")
     report: dict = {"dirs": {}, "queries": {}, "exponents": {}, "cc_rounds": {}}
-    for d in dirs:
-        label = Path(d).name
-        n_docs = docs_count(spark, d)
-        report["dirs"][label] = {"path": d, "n_docs": n_docs}
-        try:
-            report["dirs"][label]["n_events"] = events_count(spark, d)
-        except Exception:  # noqa: BLE001 — events are optional in a tree
-            pass
-        seen = set(stage_metrics(ui)) if ui else set()
-        runnables = [(n, CATALOG[n].spark) for n in queries if n in CATALOG]
-        runnables += [
-            (n, fn)
-            for n, fn in PROBES.items()
-            if queries is HEAVY or n in queries
-        ]
-        for name, run_fn in runnables:
-            t0 = time.perf_counter()
+    records: list[dict] = []
+    try:
+        spark = get_spark("scale-bench", extra_conf=event_log_conf(log_dir))
+        spark.sparkContext.setLogLevel("ERROR")
+        listener = ProgressListener()
+        spark.streams.addListener(listener)
+        # JVM/Python-worker warmup (not measured)
+        spark.range(1_000_000).selectExpr("sum(id)").collect()
+        for d in dirs:
+            label = Path(d).name
+            report["dirs"][label] = {"path": d, "n_docs": parquet_num_rows(d, "documents")}
             try:
-                # the scope drops what the query pinned, even when it
-                # fails, so no query leaks storage into the next one
-                with QueryScope(spark):
-                    run_fn(spark, d).write.format("noop").mode("overwrite").save()
-                sec = round(time.perf_counter() - t0, 3)
-                err = None
-            except Exception as exc:  # noqa: BLE001 — isolate per query
-                sec, err = None, f"{type(exc).__name__}: {exc}"[:300]
-            # each query pays its FULL model cost (codebook training
-            # included): without this, whichever memo consumer runs
-            # first absorbs training and the rest measure assignment
-            # only — the isolated numbers here are the cost-model
-            # evidence, unlike bench.py's in-catalog totals where the
-            # memo sharing is the deliberate production posture
-            clear_memo()
-            rec: dict = {"sec": sec}
-            if err:
-                rec["error"] = err
-            if ui:
-                after = stage_metrics(ui)
-                new = [after[k] for k in after.keys() - seen]
-                seen = set(after)
-                rec["shuffle_write_mb"] = round(
-                    sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6, 2
-                )
-                rec["shuffle_read_mb"] = round(
-                    sum(s.get("shuffleReadBytes", 0) for s in new) / 1e6, 2
-                )
-                rec["spill_mb"] = round(
-                    sum(
-                        s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0)
-                        for s in new
-                    )
-                    / 1e6,
-                    2,
-                )
-            if name == "dedup_clusters":
-                report["cc_rounds"][label] = cc_last_rounds()
-            report["queries"].setdefault(name, {})[label] = rec
-            msg = f"# {label} {name}: {sec}s"
-            if err:
-                msg += f" ERROR {err.splitlines()[0]}"
-            print(msg, file=sys.stderr)
+                report["dirs"][label]["n_events"] = parquet_num_rows(d, "events")
+            except OSError:  # events are optional in a tree
+                pass
+            for name in (n for n in queries if n in CATALOG):
+                rec = run_entry(spark, name, d, listener)
+                # each query pays its FULL model cost (codebook training
+                # included): without this, whichever memo consumer runs
+                # first absorbs training and the rest measure assignment
+                # only — the isolated numbers here are the cost-model
+                # evidence, unlike bench.py's in-catalog totals where the
+                # memo sharing is the deliberate production posture
+                clear_memo()
+                records.append(rec)
+                if name == "dedup_clusters":
+                    report["cc_rounds"][label] = cc_last_rounds()
+                report["queries"].setdefault(name, {})[label] = rec
+                msg = f"# {label} {name}: {rec['wall_s']}s"
+                if rec["error"]:
+                    msg += f" ERROR {rec['error'].splitlines()[0]}"
+                print(msg, file=sys.stderr)
+        spark.stop()
+        fold(log_dir, records)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
 
     for name, by_label in report["queries"].items():
         # Fit only within the generated self-similar families (the
@@ -225,9 +153,9 @@ def main() -> int:
         # label.startswith("x") filter silently dropped sf1/sf10 probes
         # and emitted null exponents.)
         pts = [
-            (report["dirs"][lbl]["n_docs"], rec["sec"])
+            (report["dirs"][lbl]["n_docs"], rec["wall_s"])
             for lbl, rec in by_label.items()
-            if rec.get("sec")
+            if not rec["error"]
             and report["dirs"][lbl]["path"].startswith("/root/scale_data/")
         ]
         report["exponents"][name] = fit_exponent(pts)
@@ -235,7 +163,6 @@ def main() -> int:
     Path(out_path).parent.mkdir(parents=True, exist_ok=True)
     Path(out_path).write_text(json.dumps(report, indent=1))
     print(json.dumps({"out": out_path, "exponents": report["exponents"]}))
-    spark.stop()
     return 0
 
 
