@@ -50,13 +50,6 @@ def token_set_jaccard(a: Column, b: Column, sep: str = " ") -> Column:
     return F.when(un == 0, F.lit(1.0)).otherwise(inter / un)
 
 
-def array_jaccard(a: Column, b: Column) -> Column:
-    """Jaccard over two array<string> columns (already tokenized)."""
-    inter = F.size(F.array_intersect(a, b))
-    un = F.size(F.array_union(a, b))
-    return F.when(un == 0, F.lit(1.0)).otherwise(inter / un)
-
-
 # --- vector similarity (ANN operators) ----------------------------------
 
 def dot(a: Column, b: Column) -> Column:

@@ -21,12 +21,49 @@ Consequences the test suite pins (tests/test_contract.py):
 
 (Rounds 1–4 used a hand-maintained ``_DEMOTED`` tuple; it produced one
 silent off-by-two and a recurring audit burden — see VERDICT r04 item 6.)
+
+CHANGED entries rank with the never-green ones. An entry is changed when
+its ``fingerprint`` — sha256 of its oracle text (repo root stripped) plus
+its transitive plan hash — differs from the record that
+``tools/refresh_oracle_hashes.py`` took at its last driver-green round
+(``oracle_green_hashes.json``). Every record has that one form; no entry
+is flagged by hand.
+
+The plan hash covers every package function, class and module constant
+the plan function reaches: globals, attribute chains on package modules
+(``dedup.minhash_lsh_pairs``), function-local imports (``from
+..streaming.sources import run_available_now_to_parquet``), nested code
+and closures (``memo`` build functions), modules bound to locals or to
+closure cells (``bpe.bpe_merges`` in ``_bpe_merge_table``), the methods
+of reached classes (``TwoLevelCodebook``) and default argument values.
+It hashes code objects — bytecode, names, nested code and constants —
+never source text, file names or line numbers, so a comment or
+docstring edit flags nothing. Constants enter through a deterministic
+text (sets and dicts sorted, addresses and the repo root stripped).
+Runtime state enters by name only: a module global that reached code
+rebinds (``global x``) and every class attribute that is not a method.
+
+The walk stops at a BOUNDARY: ``scope``, ``sources.readers``,
+``session``, ``schemas`` and ``plans.catalog.T`` (a pass-through to
+``readers.load_table``). Over 100 entries reach them, so one edit there
+would flag more entries than the window holds; a boundary object enters
+the hash by its qualified name only. Edits to the boundary are gated by
+the parity sweep and the tests, not by the window.
+
+Bytecode changes between CPython minor versions: a snapshot is only
+comparable under the minor version that wrote it (3.11), and a version
+change flags every entry once.
 """
 
 from __future__ import annotations
 
+import dis
+import hashlib
+import importlib
 import json
 import re
+import sys
+import types
 from pathlib import Path
 
 from .catalog import CATALOG, QuerySpec, bench_queries, oracle_map, query_map  # noqa: F401
@@ -36,6 +73,7 @@ from . import catalog_hebrew  # noqa: F401  (registers the corpus/domain queries
 WINDOW_SIZE = 50
 
 _REPO_ROOT = Path(__file__).resolve().parents[2]
+_ROOT = str(_REPO_ROOT)
 
 
 def load_last_green() -> dict[str, int]:
@@ -61,61 +99,245 @@ def load_last_green() -> dict[str, int]:
     return last_green
 
 
-#: name → sha256 of the oracle text as it stood when the entry was last
+#: name → ``fingerprint(spec)`` as it stood when the entry was last
 #: driver-green; maintained by tools/refresh_oracle_hashes.py (run right
-#: after each round's CORRECTNESS file lands, BEFORE any oracle edits).
-#: A mismatch against the live oracle text flags the entry CHANGED.
+#: after each round's CORRECTNESS file lands, BEFORE any edits).
 _HASH_SNAPSHOT = Path(__file__).resolve().parent / "oracle_green_hashes.json"
 
 
+def _sha(text: str) -> str:
+    return hashlib.sha256(text.encode("utf-8")).hexdigest()
+
+
 def oracle_text_hash(sql: str) -> str:
-    import hashlib
+    """sha256 of the oracle text with the repo root stripped (fixture
+    oracles embed absolute paths), so a checkout elsewhere hashes alike."""
+    return _sha(sql.replace(_ROOT, ""))
 
-    return hashlib.sha256(sql.encode("utf-8")).hexdigest()
+
+# --- transitive plan hash (the rule is in the module docstring) -----------
+
+_PKG = __name__.partition(".")[0]
+_BOUNDARY_MODULES = tuple(
+    f"{_PKG}.{m}" for m in ("scope", "sources.readers", "session", "schemas")
+)
+#: a one-line pass-through to ``readers.load_table``
+_BOUNDARY_NAMES = frozenset({f"{_PKG}.plans.catalog.T"})
+_MISSING = object()
+_OP = dis.opmap  # CPython 3.11 opcodes (see the module docstring)
+_LOAD_ATTRS = {_OP["LOAD_ATTR"], _OP["LOAD_METHOD"]}
+_LOADS = {_OP["LOAD_FAST"], _OP["LOAD_DEREF"]}
+_STORES = {_OP["STORE_FAST"], _OP["STORE_DEREF"]}
+#: the opcodes ``_refs`` reads; any other op but a CACHE ends a chain
+_WALKED = _LOAD_ATTRS | _LOADS | _STORES | {
+    _OP[o] for o in
+    ("LOAD_GLOBAL", "STORE_GLOBAL", "IMPORT_NAME", "IMPORT_FROM", "LOAD_CONST")
+}
+_LOAD_CONST_0 = bytes((_OP["LOAD_CONST"], 0))
 
 
-def plan_source_hash(spec: QuerySpec) -> str | None:
-    """sha256 of the plan function's source text, or None when the
-    source is unavailable (builtins, REPL-defined). Scope: the DIRECT
-    plan function only — an edit to a shared helper it calls is not
-    seen. That bias is deliberate: a helper edit that changes semantics
-    also changes the helper's OTHER consumers, and any semantics change
-    worth driver re-validation shows up in parity/pytest first; the
-    hash exists to catch the quiet case where one entry's own body is
-    rewritten after its last driver-green (the r13 dedup-memo refactor
-    class)."""
-    import hashlib
-    import inspect
+def _in_pkg(name) -> bool:
+    return isinstance(name, str) and name.startswith(_PKG)
 
-    try:
-        src = inspect.getsource(spec.spark)
-    except (OSError, TypeError):
-        return None
-    return hashlib.sha256(src.encode("utf-8")).hexdigest()
+
+def _qual(obj) -> str:
+    return f"{obj.__module__}.{obj.__qualname__}"
+
+
+def _stable(v, follow: list) -> str:
+    """Deterministic text of a constant: sets and dicts sorted, code by
+    its bytecode, functions and classes by qualified name (and queued on
+    ``follow``), memory addresses and the repo root stripped."""
+    if isinstance(v, types.CodeType):
+        return _code_text(v, follow)
+    if isinstance(v, (types.FunctionType, type)):
+        follow.append(v)
+        return _qual(v)
+    if isinstance(v, (tuple, list)):
+        return f"{type(v).__name__}({','.join(_stable(x, follow) for x in v)})"
+    if isinstance(v, (set, frozenset)):
+        return f"{type(v).__name__}({','.join(sorted(_stable(x, follow) for x in v))})"
+    if isinstance(v, dict):
+        items = (f"{_stable(k, follow)}:{_stable(x, follow)}" for k, x in v.items())
+        return f"dict({','.join(sorted(items))})"
+    return re.sub(r" at 0x[0-9a-f]+", "", repr(v)).replace(_ROOT, "")
+
+
+def _loads_const_0(code: bytes) -> bool:
+    """Whether ``code`` holds a ``LOAD_CONST 0``; a byte search, since
+    decoding every op of every code object twice doubles the walk."""
+    i = code.find(_LOAD_CONST_0)
+    while i != -1 and (i % 2 or (i and code[i - 2] == dis.EXTENDED_ARG)):
+        i = code.find(_LOAD_CONST_0, i + 1)
+    return i != -1
+
+
+def _code_text(co: types.CodeType, follow: list) -> str:
+    consts = list(co.co_consts)
+    # a function's docstring is co_consts[0] and is never loaded
+    if consts and isinstance(consts[0], str) and not _loads_const_0(co.co_code):
+        consts[0] = None
+    return "|".join([
+        co.co_name,
+        f"{co.co_argcount},{co.co_posonlyargcount},{co.co_kwonlyargcount},{co.co_flags}",
+        ",".join(co.co_varnames + co.co_freevars + co.co_cellvars),
+        ",".join(co.co_names),
+        co.co_code.hex(),
+        _stable(tuple(consts), follow),
+    ])
+
+
+def _refs(co: types.CodeType, g: dict, found: list, local: dict) -> None:
+    """Append ``(owner module, name, value)`` for every name ``co`` (and
+    its nested code) reads from a package namespace: globals, attribute
+    chains on package modules, function-local imports and the modules
+    they bind to locals or cells. ``local`` maps the names of the
+    enclosing code's cells that hold a module to that module."""
+    names, cur, imported, recent, ext = co.co_names, None, None, (0, 0), 0
+    # the 3.11 fast-locals layout that LOAD_/STORE_FAST and _DEREF index
+    slots = co.co_varnames + tuple(
+        v for v in co.co_cellvars if v not in co.co_varnames
+    ) + co.co_freevars
+    local = dict(local)
+
+    def get(mod, name):
+        if not isinstance(mod, types.ModuleType) or not _in_pkg(mod.__name__):
+            return None
+        v = vars(mod).get(name, _MISSING)
+        if v is _MISSING and hasattr(mod, "__path__"):  # an unimported submodule
+            v = importlib.import_module(f"{mod.__name__}.{name}")
+        if v is not _MISSING:
+            found.append((mod.__name__, name, v))
+            return v
+
+    code = co.co_code
+    for op, arg in zip(code[::2], code[1::2]):
+        if op == _OP["CACHE"]:
+            continue
+        if op == dis.EXTENDED_ARG:
+            ext = (ext | arg) << 8
+            continue
+        arg, ext = arg | ext, 0
+        if op not in _WALKED:
+            cur = None
+            continue
+        nxt = None
+        if op == _OP["LOAD_GLOBAL"]:
+            name = names[arg >> 1]
+            if name in g:  # else a builtin
+                nxt = g[name]
+                found.append((g["__name__"], name, nxt))
+        elif op in _LOAD_ATTRS:
+            nxt = get(cur, names[arg])
+        elif op in _LOADS:
+            nxt = local.get(slots[arg])
+        elif op in _STORES and isinstance(cur, types.ModuleType):
+            local[slots[arg]] = cur
+        elif op == _OP["STORE_GLOBAL"]:  # runtime state, not a constant
+            found.append((g["__name__"], names[arg], _MISSING))
+        elif op == _OP["IMPORT_NAME"]:
+            level, name = recent[0], names[arg]
+            nxt = imported = (
+                importlib.import_module("." * level + name, g["__package__"])
+                if level or _in_pkg(name) else None
+            )
+        elif op == _OP["IMPORT_FROM"]:
+            nxt = get(imported, names[arg])
+        elif op == _OP["LOAD_CONST"]:
+            recent = (recent[1], co.co_consts[arg])
+        cur = nxt
+    for c in co.co_consts:
+        if isinstance(c, types.CodeType):
+            _refs(c, g, found, {v: local[v] for v in c.co_freevars if v in local})
+
+
+def _node(obj) -> tuple[set[str], list]:
+    """(hash lines, objects to walk next) of one package function or
+    class, before following its edges."""
+    lines, follow, found = set(), [], []
+    if isinstance(obj, type):
+        # methods by code; other attributes by name, since class
+        # attributes can hold runtime state (``_AsrSingleton._instance``)
+        own = [_stable(tuple(b for b in obj.__bases__ if b is not object), follow)]
+        for name, v in sorted(vars(obj).items()):
+            v = getattr(v, "__func__", v)  # staticmethod / classmethod
+            if isinstance(v, types.FunctionType):
+                own.append(f"{name}={_stable(v, follow)}")
+            elif not name.startswith("__"):
+                own.append(name)
+    else:
+        cells = []
+        for cell in obj.__closure__ or ():
+            try:
+                cells.append(_stable(cell.cell_contents, follow))
+            except ValueError:  # an empty cell
+                cells.append("<empty>")
+        own = [
+            _code_text(obj.__code__, follow),
+            _stable((obj.__defaults__, obj.__kwdefaults__, tuple(cells)), follow),
+        ]
+        _refs(obj.__code__, obj.__globals__, found, {})
+        if hasattr(obj, "__wrapped__"):  # e.g. a module-level pandas_udf
+            follow.append(obj.__wrapped__)
+    lines.add(f"{_qual(obj)} {_sha(chr(10).join(own))}")
+    state = {(owner, name) for owner, name, v in found if v is _MISSING}
+    for owner, name, v in found:
+        if (owner, name) in state:
+            lines.add(f"{owner}.{name} state")
+        elif isinstance(v, (types.FunctionType, type)):
+            follow.append(v)
+        elif not isinstance(v, types.ModuleType):
+            b = next((b for b in _BOUNDARY_MODULES if owner == b or (
+                b in sys.modules and vars(sys.modules[b]).get(name, _MISSING) is v
+            )), None)
+            lines.add(f"{b}.{name} boundary" if b else f"{owner}.{name} {_sha(_stable(v, follow))}")
+    return lines, follow
+
+
+def plan_reach(fn, cache: dict | None = None) -> set[str]:
+    """One line per package object ``fn`` reaches, ``"<qualified name>
+    <sha256 of its own code>"`` (``"<name> boundary"`` at the boundary).
+    ``cache`` shares per-object work between calls in one pass."""
+    cache = {} if cache is None else cache
+    lines, seen, todo = set(), set(), [fn]
+    while todo:
+        obj = todo.pop()
+        if obj in seen:
+            continue
+        seen.add(obj)
+        if obj is not fn and not _in_pkg(obj.__module__):
+            continue
+        if _qual(obj) in _BOUNDARY_NAMES or obj.__module__ in _BOUNDARY_MODULES:
+            lines.add(f"{_qual(obj)} boundary")
+            continue
+        if obj not in cache:
+            cache[obj] = _node(obj)
+        lines |= cache[obj][0]
+        todo.extend(cache[obj][1])
+    return lines
+
+
+def plan_hash(fn, cache: dict | None = None) -> str:
+    """sha256 over ``plan_reach(fn)``: the transitive plan hash."""
+    return _sha("\n".join(sorted(plan_reach(fn, cache))))
+
+
+def fingerprint(spec: QuerySpec, cache: dict | None = None) -> dict[str, str]:
+    """The one snapshot record form: ``{"oracle": h, "plan": h}``."""
+    return {"oracle": oracle_text_hash(spec.oracle), "plan": plan_hash(spec.spark, cache)}
 
 
 def load_changed(catalog: dict[str, QuerySpec] | None = None) -> frozenset[str]:
-    """Oracled entries whose oracle text — or, for dict-form snapshot
-    records, whose plan-function source — differs from the snapshot
-    taken at their last driver-green round: their semantics (or the
-    plan claimed to implement them) were rewritten since the driver
-    last hash-validated them (VERDICT r12 #3: the r12 two-level rewrite
-    left both rewritten entries outside the window because
-    least-recently-green gives changed-but-previously-green entries no
-    priority). Snapshot values are either the legacy bare oracle-hash
-    string or ``{"oracle": h, "plan": h}`` (plan-source hashes added
-    r13 after a pure plan refactor slipped the oracle-only flag).
-    Placeholder convention (ADVICE r13): a ``plan`` value that is not a
-    real sha256 (e.g. ``"rewritten-r13-pending-driver-validation"``)
-    never equals ``plan_source_hash`` and therefore force-flags the
-    entry into the next driver window — used to hand-flag entries whose
-    rewrite lives in a shared HELPER the direct-function hash cannot
-    see, or whose plan body changed after their last driver-green.
-    ``tools/refresh_oracle_hashes.py`` replaces the placeholder with the
-    real hashes on the entry's next driver-green.
-    Entries absent from the snapshot are NOT flagged (a brand-new entry
-    is never-green and already sorts first); an unreadable snapshot
-    degrades to 'nothing flagged', never breaks `import plans`."""
+    """Oracled entries whose ``fingerprint`` differs from the snapshot
+    taken at their last driver-green round: their oracle, their plan
+    function or anything it reaches short of the boundary was rewritten
+    since the driver last hash-validated them (VERDICT r12 #3:
+    least-recently-green alone gives changed-but-previously-green
+    entries no priority, so the r12 two-level rewrite left both
+    rewritten entries outside the window). Entries absent from the
+    snapshot are NOT flagged (a brand-new entry is never-green and
+    already sorts first); an unreadable snapshot degrades to 'nothing
+    flagged', never breaks `import plans`."""
     cat = CATALOG if catalog is None else catalog
     try:
         snap = json.loads(_HASH_SNAPSHOT.read_text())
@@ -123,20 +345,11 @@ def load_changed(catalog: dict[str, QuerySpec] | None = None) -> frozenset[str]:
         return frozenset()
     if not isinstance(snap, dict):
         return frozenset()
-
-    def _is_changed(name: str, spec: QuerySpec) -> bool:
-        rec = snap.get(name)
-        if rec is None:
-            return False
-        if isinstance(rec, dict):
-            if rec.get("oracle") != oracle_text_hash(spec.oracle):
-                return True
-            want = rec.get("plan")
-            return want is not None and want != plan_source_hash(spec)
-        return rec != oracle_text_hash(spec.oracle)
-
+    cache: dict = {}
     return frozenset(
-        n for n, s in cat.items() if s.oracle is not None and _is_changed(n, s)
+        n
+        for n, s in cat.items()
+        if s.oracle is not None and n in snap and snap[n] != fingerprint(s, cache)
     )
 
 
@@ -201,10 +414,12 @@ __all__ = [
     "WINDOW_SIZE",
     "bench_queries",
     "driver_window",
+    "fingerprint",
     "load_changed",
     "load_last_green",
     "oracle_text_hash",
     "oracle_map",
+    "plan_hash",
     "query_map",
     "rotation_order",
 ]

@@ -773,9 +773,13 @@ def aligned_verse_rollup(spark: SparkSession, ch: DataFrame) -> DataFrame:
         threshold=0.6,
     ).withColumnRenamed("group_key", "chkey")
 
+    # The hint fixes the build side. Without it AQE broadcast whichever
+    # side's shuffle finished first, so the job count varied (12 or 13).
     return (
         aligned.join(
-            toks.select("chkey", F.col("token_idx").alias("ref_idx"), "book", "chapter", "verse_num"),
+            F.broadcast(
+                toks.select("chkey", F.col("token_idx").alias("ref_idx"), "book", "chapter", "verse_num")
+            ),
             ["chkey", "ref_idx"],
         )
         .groupBy("book", "chapter", "verse_num")

@@ -121,18 +121,22 @@ class TestRotation:
 
     def test_refresh_merge_rule(self):
         """tools/refresh_oracle_hashes.merge_snapshot: latest-round
-        green entries take the live hash (clearing their changed flag);
-        entries green only in OLDER rounds keep the recorded hash even
-        if the live text differs (a rewrite must stay flagged until the
-        driver re-validates); names gone from the catalog are dropped."""
+        green entries take the live fingerprint (clearing their changed
+        flag); entries green only in OLDER rounds keep the recorded
+        fingerprint even if the live tree differs (a rewrite must stay
+        flagged until the driver re-validates); names gone from the
+        catalog are dropped."""
         from tools.refresh_oracle_hashes import merge_snapshot
 
-        snap = {"a": "old-a", "b": "rewritten-sentinel", "gone": "x"}
+        def fp(tag):
+            return {"oracle": f"o-{tag}", "plan": f"p-{tag}"}
+
+        snap = {"a": fp("old-a"), "b": fp("old-b"), "gone": fp("x")}
         latest = {"a": {"hash_match": True}, "c": {"hash_match": True},
                   "d": {"hash_match": False}}
-        hashes = {"a": "new-a", "b": "new-b", "c": "new-c", "d": "new-d"}
-        out, updated, dropped = merge_snapshot(snap, latest, hashes)
-        assert out == {"a": "new-a", "b": "rewritten-sentinel", "c": "new-c"}
+        live = {"a": fp("a"), "b": fp("b"), "c": fp("c"), "d": fp("d")}
+        out, updated, dropped = merge_snapshot(snap, latest, live)
+        assert out == {"a": fp("a"), "b": fp("old-b"), "c": fp("c")}
         assert sorted(updated) == ["a", "c"]
         assert dropped == ["gone"]
 
@@ -149,44 +153,44 @@ class TestRotation:
         assert not out, f"changed entries left out of the driver window: {out}"
 
     def test_plan_source_change_flags_entry(self, tmp_path, monkeypatch):
-        """r13: a PLAN-function rewrite with an untouched oracle must
-        flag the entry changed (the oracle-only hash let the dedup-memo
-        refactor slip the window). Dict-form snapshot records carry
-        both hashes; legacy bare strings stay oracle-only; a matching
-        dict record flags nothing."""
-        import json
-
+        """r13: a PLAN rewrite with an untouched oracle must flag the
+        entry changed (the oracle-only hash let the dedup-memo refactor
+        slip the window). A record equal to the live fingerprint flags
+        nothing; a stale plan or oracle hash flags the entry."""
         from hebrew_tutor_data_pipeline_spark import plans
-        from hebrew_tutor_data_pipeline_spark.plans import (
-            CATALOG,
-            load_changed,
-            oracle_text_hash,
-            plan_source_hash,
-        )
 
         name = next(n for n, s in CATALOG.items() if s.oracle is not None)
         spec = CATALOG[name]
-        live_plan = plan_source_hash(spec)
-        assert live_plan is not None  # catalog functions have source
+        live = plans.fingerprint(spec)
         snap_file = tmp_path / "snap.json"
         monkeypatch.setattr(plans, "_HASH_SNAPSHOT", snap_file)
         cat = {name: spec}
 
-        def write(rec):
-            snap_file.write_text(json.dumps({name: rec}))
+        def flagged(**stale):
+            snap_file.write_text(json.dumps({name: {**live, **stale}}))
+            return name in plans.load_changed(cat)
 
-        # dict record, both hashes current: not flagged
-        write({"oracle": oracle_text_hash(spec.oracle), "plan": live_plan})
-        assert name not in load_changed(cat)
-        # dict record, stale plan hash: flagged even with oracle green
-        write({"oracle": oracle_text_hash(spec.oracle), "plan": "stale"})
-        assert name in load_changed(cat)
-        # dict record, stale oracle hash: flagged
-        write({"oracle": "stale", "plan": live_plan})
-        assert name in load_changed(cat)
-        # legacy bare string, oracle current: not flagged (plan unseen)
-        write(oracle_text_hash(spec.oracle))
-        assert name not in load_changed(cat)
+        assert not flagged()
+        assert flagged(plan="0" * 64)
+        assert flagged(oracle="0" * 64)
+
+    def test_snapshot_records_have_one_form(self):
+        """Every snapshot record is exactly {"oracle": sha256, "plan":
+        sha256}: one record form, one way an entry gets flagged."""
+        import re
+
+        from hebrew_tutor_data_pipeline_spark.plans import _HASH_SNAPSHOT
+
+        snap = json.loads(_HASH_SNAPSHOT.read_text())
+        hex64 = re.compile(r"[0-9a-f]{64}")
+        bad = {
+            n: r for n, r in snap.items()
+            if not (isinstance(r, dict) and set(r) == {"oracle", "plan"}
+                    and all(isinstance(v, str) and hex64.fullmatch(v)
+                            for v in r.values()))
+        }
+        assert not bad, bad
+        assert set(snap) <= set(CATALOG)
 
     def test_live_window_is_fifty_oracled(self):
         from hebrew_tutor_data_pipeline_spark.plans import WINDOW_SIZE, driver_window
@@ -194,6 +198,133 @@ class TestRotation:
         win = driver_window()
         assert len(win) == WINDOW_SIZE
         assert all(CATALOG[n].oracle is not None for n in win)
+
+
+class TestPlanHash:
+    """The transitive plan hash (plans.plan_hash): an edit anywhere a
+    plan reaches flags exactly the entries that reach it; an edit past
+    the boundary, a comment or a docstring flags nothing. Edits are
+    made in memory (monkeypatch), never on disk."""
+
+    @pytest.fixture()
+    def flagged(self, tmp_path, monkeypatch):
+        """Point the snapshot at the live fingerprints; the returned
+        callable gives the entries flagged after the test's edit."""
+        from hebrew_tutor_data_pipeline_spark import plans
+
+        snap = tmp_path / "snap.json"
+        cache: dict = {}
+        snap.write_text(json.dumps(
+            {n: plans.fingerprint(s, cache) for n, s in CATALOG.items()}
+        ))
+        monkeypatch.setattr(plans, "_HASH_SNAPSHOT", snap)
+        assert not plans.load_changed()
+        return lambda: set(plans.load_changed())
+
+    def test_helper_edit_flags_its_consumers(self, flagged, monkeypatch):
+        from hebrew_tutor_data_pipeline_spark.plans import catalog_ml
+
+        monkeypatch.setattr(catalog_ml, "_snapshot_flat", lambda spark, sf_dir: None)
+        assert flagged() == {
+            "corpus_snapshot_diff", "incremental_curation_delta", "curation_refresh_e2e",
+        }
+
+    def test_local_import_edge(self, flagged, monkeypatch):
+        """The stream plans import the runner inside their bodies."""
+        from hebrew_tutor_data_pipeline_spark.streaming import sources
+
+        monkeypatch.setattr(sources, "run_available_now_to_parquet", lambda *a, **k: None)
+        streams = {n for n in CATALOG if n.startswith("streaming_")}
+        assert len(streams) == 10
+        assert flagged() == streams
+
+    def test_module_held_in_a_closure_cell(self, flagged, monkeypatch):
+        """``_bpe_merge_table`` imports ``bpe`` locally and its memo
+        ``build`` closure calls ``bpe.bpe_merges``: the module lives in
+        a cell (STORE_DEREF / LOAD_DEREF), not a fast local."""
+        from hebrew_tutor_data_pipeline_spark.operators import bpe
+
+        monkeypatch.setattr(bpe, "bpe_merges", lambda *a, **k: None)
+        assert flagged() == {"bpe_merge_rounds", "bpe_encode_corpus", "bpe_vocab_coverage"}
+
+    def test_default_argument_edit(self, flagged, monkeypatch):
+        from hebrew_tutor_data_pipeline_spark.operators import ann
+
+        monkeypatch.setattr(ann.kmeans_codebook, "__defaults__", (32, 3))
+        assert flagged() == {
+            "ann_ivf_kmeans_top10", "cluster_balanced_sample",
+            "embedding_outlier_scores", "semantic_dedup_flags",
+        }
+
+    def test_boundary_edit_flags_nothing(self, flagged, monkeypatch):
+        """scope.pin is reached by 13 entries; rewriting its body in
+        place is still invisible past the boundary."""
+        from hebrew_tutor_data_pipeline_spark import scope
+
+        monkeypatch.setattr(scope.pin, "__code__", (lambda *a, **k: None).__code__)
+        assert flagged() == set()
+
+    def test_comments_docstrings_and_lines_do_not_count(self):
+        from hebrew_tutor_data_pipeline_spark.plans import plan_hash
+
+        plain = "def f(x):\n    return [x + 1 for _ in range(2)]\n"
+        noted = (
+            "\n\n# header\ndef f(x):\n    \"\"\"A docstring.\"\"\"\n"
+            "    # a comment\n    return [x + 1 for _ in range(2)]  # trailing\n"
+        )
+        edited = "def f(x):\n    return [x + 2 for _ in range(2)]\n"
+        # a comprehension's first constant is loaded, unlike a docstring
+        keyed = "def f(x):\n    return [y for y in x if y == 'a']\n"
+
+        def compiled(src, filename):
+            ns = {"__name__": "hebrew_tutor_data_pipeline_spark.plans.probe"}
+            exec(compile(src, filename, "exec"), ns)
+            return ns["f"]
+
+        assert plan_hash(compiled(plain, "a.py")) == plan_hash(compiled(noted, "b.py"))
+        assert plan_hash(compiled(plain, "a.py")) != plan_hash(compiled(edited, "a.py"))
+        assert plan_hash(compiled(keyed, "a.py")) != plan_hash(
+            compiled(keyed.replace("'a'", "'b'"), "a.py")
+        )
+
+    def test_stable_across_checkout_and_hash_seed(self, tmp_path):
+        """A copy of the package imported from another directory, under
+        another PYTHONHASHSEED, gives the same 148 fingerprints."""
+        import os
+        import shutil
+        import subprocess
+
+        from hebrew_tutor_data_pipeline_spark.plans import fingerprint, plan_hash
+
+        repo = Path(__file__).resolve().parent.parent
+        for part in ("hebrew_tutor_data_pipeline_spark", "tests/fixtures"):
+            shutil.copytree(repo / part, tmp_path / part,
+                            ignore=shutil.ignore_patterns("__pycache__"))
+        # no catalog plan reaches a set of strings, so a probe does
+        probe = "def probe(x):\n    return x in {'alpha', 'beta', 'gamma', 'delta'}\n"
+        code = (
+            "import json, sys; sys.path.insert(0, '.');"
+            "from hebrew_tutor_data_pipeline_spark import plans;"
+            "assert plans.__file__.startswith(sys.argv[1]), plans.__file__;"
+            f"ns = {{'__name__': 'probe'}}; exec({probe!r}, ns);"
+            "fps = {n: plans.fingerprint(s) for n, s in plans.CATALOG.items()};"
+            "print(json.dumps([fps, plans.plan_hash(ns['probe'])]))"
+        )
+        seed = "8" if os.environ.get("PYTHONHASHSEED") == "7" else "7"
+        env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+        out = subprocess.run(
+            [sys.executable, "-c", code, str(tmp_path)], cwd=tmp_path,
+            env={**env, "PYTHONHASHSEED": seed},
+            capture_output=True, text=True, check=True,
+        ).stdout
+        theirs, their_probe = json.loads(out.splitlines()[-1])
+        cache: dict = {}
+        ours = {n: fingerprint(s, cache) for n, s in CATALOG.items()}
+        assert len(theirs) == 148
+        assert theirs == ours
+        ns = {"__name__": "probe"}
+        exec(compile(probe, "<string>", "exec", dont_inherit=True), ns)
+        assert their_probe == plan_hash(ns["probe"])
 
 
 def test_entry_smoke(spark):

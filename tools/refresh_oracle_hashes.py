@@ -1,15 +1,16 @@
 """Refresh plans/oracle_green_hashes.json — the changed-entries-first
-rotation's memory of "which oracle text the driver last validated".
+rotation's memory of "which oracle and plan the driver last validated".
 
 Run RIGHT AFTER a round's CORRECTNESS_r{N}.json lands (i.e. at round
-start, before touching any oracle): for every entry hash-green in the
-LATEST correctness record, the live oracle text is by construction the
-text the driver just validated, so its sha256 becomes the entry's
-snapshot value. Entries green only in OLDER rounds keep their existing
-snapshot untouched — updating them from the live text would silently
-clear a changed flag without driver validation (exactly the gap VERDICT
-r12 #3 closed). Never-green entries stay absent: they already sort
-first in the rotation.
+start, before touching any oracle or plan code): for every entry
+hash-green in the LATEST correctness record, the live tree is by
+construction the one the driver just validated, so its
+``plans.fingerprint`` (oracle-text hash + transitive plan hash) becomes
+the entry's snapshot record. Entries green only in OLDER rounds keep
+their existing record untouched — updating them from the live tree
+would silently clear a changed flag without driver validation (exactly
+the gap VERDICT r12 #3 closed). Never-green entries stay absent: they
+already sort first in the rotation.
 
 Usage: python tools/refresh_oracle_hashes.py [--dry-run]
 """
@@ -26,12 +27,12 @@ sys.path.insert(0, str(REPO))
 
 
 def merge_snapshot(
-    snap: dict[str, str],
+    snap: dict[str, dict],
     latest_record: dict,
-    oracle_hashes: dict[str, str],
-) -> tuple[dict[str, str], list[str], list[str]]:
+    fingerprints: dict[str, dict],
+) -> tuple[dict[str, dict], list[str], list[str]]:
     """Pure merge rule: entries hash-green in the LATEST record take the
-    live oracle hash (the text the driver just validated); entries green
+    live fingerprint (the tree the driver just validated); entries green
     only in older rounds keep their existing snapshot value (updating
     them would silently clear a changed flag without driver
     validation); names no longer in the catalog are dropped. Returns
@@ -41,11 +42,11 @@ def merge_snapshot(
     for name, rec in latest_record.items():
         if not (isinstance(rec, dict) and rec.get("hash_match") is True):
             continue
-        h = oracle_hashes.get(name)
+        h = fingerprints.get(name)
         if h is not None and out.get(name) != h:
             out[name] = h
             updated.append(name)
-    dropped = sorted(set(out) - set(oracle_hashes))
+    dropped = sorted(set(out) - set(fingerprints))
     for name in dropped:
         del out[name]
     return out, updated, dropped
@@ -55,7 +56,7 @@ def main() -> int:
     from hebrew_tutor_data_pipeline_spark.plans import (
         CATALOG,
         _HASH_SNAPSHOT,
-        oracle_text_hash,
+        fingerprint,
     )
 
     records = sorted(
@@ -74,16 +75,9 @@ def main() -> int:
     except (OSError, ValueError):
         snap = {}
 
-    from hebrew_tutor_data_pipeline_spark.plans import plan_source_hash
-
-    # dict form (r13): oracle-text hash + plan-function source hash, so
-    # a plan refactor re-enters the window even when the oracle text is
-    # untouched. Legacy bare-string records remain readable by
-    # load_changed and upgrade here on the entry's next driver-green.
+    cache: dict = {}
     hashes = {
-        n: {"oracle": oracle_text_hash(s.oracle), "plan": plan_source_hash(s)}
-        for n, s in CATALOG.items()
-        if s.oracle is not None
+        n: fingerprint(s, cache) for n, s in CATALOG.items() if s.oracle is not None
     }
     snap, updated, stale = merge_snapshot(snap, data, hashes)
 
