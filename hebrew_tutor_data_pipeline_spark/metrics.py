@@ -1,12 +1,12 @@
 """One way to measure a catalog entry: a record per entry.
 
 A harness builds its session with ``event_log_conf(dir)``, registers a
-``ProgressListener`` and runs each entry through ``run_entry``. That
-gives the entry's wall time split into plan build and execution, the
-half-open range of job ids submitted while it ran, and the stream
-progress events it produced. After ``spark.stop()`` has flushed the
-event log, ``fold`` reads it once and adds the engine metrics of each
-record's jobs.
+``streaming.progress.ProgressListener`` and runs each entry through
+``run_entry``. That gives the entry's wall time split into plan build
+and execution, the half-open range of job ids submitted while it ran,
+and the stream progress events it produced. After ``spark.stop()`` has
+flushed the event log, ``fold`` reads it once and adds the engine
+metrics of each record's jobs.
 
 Jobs are selected by id range, not by job group: stream micro-batches
 run under the stream's own job group, so a group misses them. A range
@@ -34,10 +34,10 @@ from collections.abc import Iterable
 from pathlib import Path
 
 from pyspark.sql import SparkSession
-from pyspark.sql.streaming import StreamingQueryListener
 
 from .plans import CATALOG
 from .scope import QueryScope
+from .streaming.progress import ProgressListener
 
 MB = 2**20
 SUMS = (
@@ -65,25 +65,6 @@ def event_log_conf(log_dir: str) -> dict[str, str]:
 def jobs_submitted(spark: SparkSession) -> int:
     """Jobs submitted in this SparkContext so far (the next job id)."""
     return int(spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs())
-
-
-class ProgressListener(StreamingQueryListener):
-    """Appends every stream progress event, parsed, to ``progress``."""
-
-    def __init__(self) -> None:
-        self.progress: list[dict] = []
-
-    def onQueryStarted(self, event) -> None:
-        pass
-
-    def onQueryProgress(self, event) -> None:
-        self.progress.append(json.loads(event.progress.json))
-
-    def onQueryIdle(self, event) -> None:
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        pass
 
 
 def run_entry(spark: SparkSession, name: str, sf_dir: str, listener: ProgressListener) -> dict:

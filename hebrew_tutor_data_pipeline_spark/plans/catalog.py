@@ -674,12 +674,7 @@ def streaming_tumbling_hour_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     policy (nanos→micros or NTZ→LTZ) so stream and batch share one time
     domain.
     """
-    from ..streaming.sources import (
-        events_parquet_stream,
-        parquet_num_rows,
-        run_available_now_to_parquet,
-        scratch_key_for,
-    )
+    from ..streaming.sources import events_parquet_stream, run_available_now_to_parquet
     from ..streaming.windows import tumbling_window_stats
 
     # avg_value already derives from the 4dp-agreed sum INSIDE
@@ -695,10 +690,8 @@ def streaming_tumbling_hour_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     return run_available_now_to_parquet(
         agg,
-        scratch_key=scratch_key_for(sf_dir),
         output_mode="complete",
         query_name="tumbling_hour_stats_stream",
-        input_rows=parquet_num_rows(sf_dir, "events"),
     )
 
 
@@ -725,12 +718,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     every-key-ever. Output projects the key alone — the one frame shape
     whose value hash is independent of intra-batch arrival order."""
     from ..streaming.dedup import dedup_within_watermark
-    from ..streaming.sources import (
-        events_parquet_stream,
-        parquet_num_rows,
-        run_available_now_to_parquet,
-        scratch_key_for,
-    )
+    from ..streaming.sources import events_parquet_stream, run_available_now_to_parquet
 
     stream = events_parquet_stream(spark, sf_dir)
     keyed = stream.select(
@@ -743,10 +731,8 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("user_id", "event_type", "minute")
     return run_available_now_to_parquet(
         deduped,
-        scratch_key=scratch_key_for(sf_dir),
         output_mode="append",
         query_name="dedup_events_stream",
-        input_rows=parquet_num_rows(sf_dir, "events"),
     )
 
 
@@ -781,12 +767,7 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the identical plan in append mode with a watermark. The sum
     is rounded at 4 dp (streaming state accumulates in arrival order;
     the rounded sum is the cross-engine-stable surface)."""
-    from ..streaming.sources import (
-        events_parquet_stream,
-        parquet_num_rows,
-        run_available_now_to_parquet,
-        scratch_key_for,
-    )
+    from ..streaming.sources import events_parquet_stream, run_available_now_to_parquet
 
     cust = T(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     stream = events_parquet_stream(spark, sf_dir)
@@ -802,10 +783,8 @@ def streaming_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return run_available_now_to_parquet(
         agg,
-        scratch_key=scratch_key_for(sf_dir),
         output_mode="complete",
         query_name="static_enrichment_stream",
-        input_rows=parquet_num_rows(sf_dir, "events"),
     )
 
 
@@ -850,12 +829,7 @@ def streaming_terminal_job_status(spark: SparkSession, sf_dir: str) -> DataFrame
     for abandoned keys — the unbounded-stream memory model the reference
     approximates with its 60-attempt poll cap."""
     from ..streaming.polling import terminal_jobs
-    from ..streaming.sources import (
-        events_parquet_stream,
-        parquet_num_rows,
-        run_available_now_to_parquet,
-        scratch_key_for,
-    )
+    from ..streaming.sources import events_parquet_stream, run_available_now_to_parquet
 
     updates = events_parquet_stream(spark, sf_dir).select(
         F.col("user_id").cast("string").alias("job_id"),
@@ -868,10 +842,8 @@ def streaming_terminal_job_status(spark: SparkSession, sf_dir: str) -> DataFrame
     out = terminal_jobs(updates, job_col="job_id", status_col="status", ts_col="ts")
     return run_available_now_to_parquet(
         out,
-        scratch_key=scratch_key_for(sf_dir),
         output_mode="append",
         query_name="terminal_job_status_stream",
-        input_rows=parquet_num_rows(sf_dir, "events"),
     )
 
 
@@ -905,17 +877,10 @@ def streaming_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan (no second pass over the data) and only one tiny metrics map
     per micro-batch reaches the driver — progress cost is independent
     of corpus width, exactly what a 100 TB stream needs."""
-    import time as _time
+    from ..streaming.progress import ProgressListener, with_observed_metrics
+    from ..streaming.sources import events_parquet_stream, run_available_now_to_parquet
 
-    from ..streaming.progress import CountingListener, with_observed_metrics
-    from ..streaming.sources import (
-        events_parquet_stream,
-        parquet_num_rows,
-        run_available_now_to_parquet,
-        scratch_key_for,
-    )
-
-    listener = CountingListener()
+    listener = ProgressListener()
     spark.streams.addListener(listener)
     try:
         observed = with_observed_metrics(
@@ -924,32 +889,21 @@ def streaming_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).observe("totals", F.round(F.sum("value"), 4).alias("sum_value"))
         run_available_now_to_parquet(
             observed.select("event_id"),
-            scratch_key=scratch_key_for(sf_dir),
             output_mode="append",
             query_name="progress_metrics_stream",
-            input_rows=parquet_num_rows(sf_dir, "events"),
         )
-        # listener events are delivered on the listener-bus thread —
-        # wait (bounded) for the data batch's progress to arrive
-        deadline = _time.time() + 30
-        data: list[dict] = []
-        while _time.time() < deadline:
-            # filter by query NAME, not just row count: the listener bus
-            # is session-wide and a concurrent stream's data batches
-            # would otherwise inflate these metrics
-            data = [
-                p
-                for p in listener.progress
-                if p["numInputRows"] > 0
-                and p.get("name") == "progress_metrics_stream"
-            ]
-            if data:
-                break
-            _time.sleep(0.2)
-        if not data:
-            raise TimeoutError("no progress events with input rows arrived")
+        # progress events reach the listener through the listener bus
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     finally:
         spark.streams.removeListener(listener)
+    # filter by query NAME, not just row count: the listener bus is
+    # session-wide and a concurrent stream's data batches would
+    # otherwise inflate these metrics
+    data = [
+        p
+        for p in listener.progress
+        if p["numInputRows"] > 0 and p["name"] == "progress_metrics_stream"
+    ]
     obs = [p["observedMetrics"] for p in data]
     return spark.createDataFrame(
         [
@@ -1004,12 +958,7 @@ def streaming_sliding_quarter_stats(spark: SparkSession, sf_dir: str) -> DataFra
     state is (#windows × #slides) aggregates, independent of event
     width — the same bounded-state story as the tumbling entry, times
     the overlap factor."""
-    from ..streaming.sources import (
-        events_parquet_stream,
-        parquet_num_rows,
-        run_available_now_to_parquet,
-        scratch_key_for,
-    )
+    from ..streaming.sources import events_parquet_stream, run_available_now_to_parquet
     from ..streaming.windows import sliding_window_stats
 
     agg = sliding_window_stats(
@@ -1022,10 +971,8 @@ def streaming_sliding_quarter_stats(spark: SparkSession, sf_dir: str) -> DataFra
     )
     return run_available_now_to_parquet(
         agg,
-        scratch_key=scratch_key_for(sf_dir),
         output_mode="complete",
         query_name="sliding_quarter_stats_stream",
-        input_rows=parquet_num_rows(sf_dir, "events"),
     )
 
 
@@ -1073,12 +1020,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     event can extend the session — arrival-rate-bounded, never
     history-bounded — and runs on the RocksDB state store like every
     stream this runner starts."""
-    from ..streaming.sources import (
-        events_parquet_stream,
-        parquet_num_rows,
-        run_available_now_to_parquet,
-        scratch_key_for,
-    )
+    from ..streaming.sources import events_parquet_stream, run_available_now_to_parquet
     from ..streaming.windows import session_window_stats
 
     agg = session_window_stats(
@@ -1090,10 +1032,8 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return run_available_now_to_parquet(
         agg,
-        scratch_key=scratch_key_for(sf_dir),
         output_mode="complete",
         query_name="session_windows_stream",
-        input_rows=parquet_num_rows(sf_dir, "events"),
     )
 
 
@@ -1125,12 +1065,7 @@ def streaming_clicks_in_purchase_windows(spark: SparkSession, sf_dir: str) -> Da
     ~watermark), so join state is arrival-rate-bounded on unbounded
     streams — never history-bounded — on the RocksDB store."""
     from ..streaming.joins import clicks_in_purchase_windows_stream
-    from ..streaming.sources import (
-        events_parquet_stream,
-        parquet_num_rows,
-        run_available_now_to_parquet,
-        scratch_key_for,
-    )
+    from ..streaming.sources import events_parquet_stream, run_available_now_to_parquet
 
     ev = events_parquet_stream(spark, sf_dir)
     clicks = ev.filter(F.col("event_type") == "click")
@@ -1142,10 +1077,8 @@ def streaming_clicks_in_purchase_windows(spark: SparkSession, sf_dir: str) -> Da
     )
     return run_available_now_to_parquet(
         joined,
-        scratch_key=scratch_key_for(sf_dir),
         output_mode="append",
         query_name="clicks_purchase_join_stream",
-        input_rows=parquet_num_rows(sf_dir, "events"),
     )
 
 
@@ -1172,12 +1105,7 @@ def streaming_user_clicks_purchase_windows(spark: SparkSession, sf_dir: str) -> 
     join hash both gain the high-cardinality key; watermarks bound
     state lifetime exactly as in the unkeyed form."""
     from ..streaming.joins import clicks_in_purchase_windows_stream
-    from ..streaming.sources import (
-        events_parquet_stream,
-        parquet_num_rows,
-        run_available_now_to_parquet,
-        scratch_key_for,
-    )
+    from ..streaming.sources import events_parquet_stream, run_available_now_to_parquet
 
     ev = events_parquet_stream(spark, sf_dir)
     clicks = ev.filter(F.col("event_type") == "click")
@@ -1190,10 +1118,8 @@ def streaming_user_clicks_purchase_windows(spark: SparkSession, sf_dir: str) -> 
     )
     return run_available_now_to_parquet(
         joined,
-        scratch_key=scratch_key_for(sf_dir) + "_keyed",
         output_mode="append",
         query_name="user_clicks_purchase_join_stream",
-        input_rows=parquet_num_rows(sf_dir, "events"),
     )
 
 

@@ -646,7 +646,7 @@ def streaming_chapter_source_pyds(spark: SparkSession, sf_dir: str) -> DataFrame
     reference running the same chapter loop in one-shot and
     resume-daemon modes (`fixed_hebrew_aligner.py:724-731`)."""
     from ..sources.pyds import register_chapter_source
-    from ..streaming.sources import run_available_now_to_parquet, scratch_key_for
+    from ..streaming.sources import run_available_now_to_parquet
 
     register_chapter_source(spark)
     stream = (
@@ -657,7 +657,6 @@ def streaming_chapter_source_pyds(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     return run_available_now_to_parquet(
         stream,
-        scratch_key=scratch_key_for(sf_dir),
         output_mode="append",
         query_name="chapter_source_pyds_stream",
     )
@@ -2169,9 +2168,7 @@ def blob_upload_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.binary_sink import upload_blobs
     from ..sources.readers import read_binary_files
-    from ..streaming.sources import _sweep_stale_scratch
 
-    _sweep_stale_scratch(spark.sparkContext.applicationId)
     files = (
         read_binary_files(spark, FIXTURE_AUDIO_TREE, glob="*.mp3")
         .filter(F.col("length") >= 1024)

@@ -1949,67 +1949,73 @@ def bm25_keyword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared BM25 top-20 scorer (see bm25_keyword_topk docstring);
-    also the candidate generator for bm25_prf_rerank."""
-    d = spread(T(spark, sf_dir, "documents"))
-    dl = d.select(
-        "doc_id", text.whitespace_token_count(F.col("text")).alias("dl")
-    )
-    st = dl.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
-    tf = (
-        d.select("doc_id", F.explode(text.whitespace_tokens(F.col("text"))).alias("w"))
-        .filter(F.col("w").isin(*_BM25_TERMS))
-        .groupBy("doc_id", "w")
-        .agg(F.count("*").alias("tf"))
-    )
-    idf = (
-        tf.groupBy("w")
-        .agg(F.count("*").alias("df"))
-        .crossJoin(F.broadcast(st))
-        .select(
-            "w",
-            F.round(
-                F.log(
-                    (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-                ),
-                8,
-            ).alias("idf"),
-            "avgdl",
+    also the candidate generator for bm25_prf_rerank, hybrid_rrf_fusion
+    and retrieval_hard_negatives. Held in ``scope.memo`` so all four
+    entries share one posting scan whichever runs first."""
+
+    def build() -> DataFrame:
+        d = spread(T(spark, sf_dir, "documents"))
+        dl = d.select(
+            "doc_id", text.whitespace_token_count(F.col("text")).alias("dl")
         )
-    )
-    contrib_e8 = F.floor(
-        F.col("idf")
-        * (F.col("tf") * F.lit(2.2))
-        / (
-            F.col("tf")
-            + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.col("avgdl"))
+        st = dl.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
+        tf = (
+            d.select("doc_id", F.explode(text.whitespace_tokens(F.col("text"))).alias("w"))
+            .filter(F.col("w").isin(*_BM25_TERMS))
+            .groupBy("doc_id", "w")
+            .agg(F.count("*").alias("tf"))
         )
-        * F.lit(100000000)
-        + F.lit(0.5)
-    )
-    top = (
-        tf.join(F.broadcast(idf), "w")
-        .join(dl, "doc_id")
-        .withColumn("contrib_e8", contrib_e8)
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_terms"),
-            F.round(
-                F.sum("contrib_e8").cast("double") / F.lit(100000000.0), 6
-            ).alias("bm25"),
+        idf = (
+            tf.groupBy("w")
+            .agg(F.count("*").alias("df"))
+            .crossJoin(F.broadcast(st))
+            .select(
+                "w",
+                F.round(
+                    F.log(
+                        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
+                    ),
+                    8,
+                ).alias("idf"),
+                "avgdl",
+            )
         )
-        .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
-        .limit(20)
-    )
-    # ≤20 rows by construction, but EVERY downstream consumer pair (PRF
-    # centroid + rerank, RRF anchor + fuse, hard-negative anchor + anti
-    # join) referenced it twice — re-running the corpus-wide posting
-    # scan + TakeOrderedAndProject once per reference (guide §2.4 /
-    # §5: cache when the recompute is a corpus pass and the cache is
-    # bytes). Lineage intact; eviction degrades to recompute. EAGER
-    # (r14): a lazy boundary with two consumers in one action races
-    # under AQE's concurrent stage materialization — the count pins the
-    # posting scan to exactly one execution.
-    return pin(top)
+        contrib_e8 = F.floor(
+            F.col("idf")
+            * (F.col("tf") * F.lit(2.2))
+            / (
+                F.col("tf")
+                + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.col("avgdl"))
+            )
+            * F.lit(100000000)
+            + F.lit(0.5)
+        )
+        top = (
+            tf.join(F.broadcast(idf), "w")
+            .join(dl, "doc_id")
+            .withColumn("contrib_e8", contrib_e8)
+            .groupBy("doc_id")
+            .agg(
+                F.count("*").alias("n_terms"),
+                F.round(
+                    F.sum("contrib_e8").cast("double") / F.lit(100000000.0), 6
+                ).alias("bm25"),
+            )
+            .orderBy(F.col("bm25").desc(), F.col("doc_id").asc())
+            .limit(20)
+        )
+        # ≤20 rows by construction, but EVERY downstream consumer pair (PRF
+        # centroid + rerank, RRF anchor + fuse, hard-negative anchor + anti
+        # join) referenced it twice — re-running the corpus-wide posting
+        # scan + TakeOrderedAndProject once per reference (guide §2.4 /
+        # §5: cache when the recompute is a corpus pass and the cache is
+        # bytes). Lineage intact; eviction degrades to recompute. EAGER
+        # (r14): a lazy boundary with two consumers in one action races
+        # under AQE's concurrent stage materialization — the count pins the
+        # posting scan to exactly one execution.
+        return pin(top)
+
+    return memo(spark, ("bm25_topk", sf_dir), build)
 
 
 @_register(

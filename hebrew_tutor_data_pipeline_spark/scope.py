@@ -17,6 +17,8 @@ module functions below:
 - ``set_conf(spark, key, value)`` sets a session conf key and remembers
   the value it replaced.
 - ``scratch(spark, name)`` returns ``<tmp>/htdp_<name>_<applicationId>``.
+  The first scratch path a process mints also sweeps the ``htdp_*``
+  trees that dead sessions left behind.
 
 The current scope owns what these register. When the ``with`` block
 ends — normally or by an exception — the scope unpersists its pins and
@@ -39,18 +41,19 @@ as it would without this module, and owns the cleanup itself.
 ``memo(spark, key, build)`` is the one process-lifetime cache. Entries
 that are views over one expensive artifact (the SimHash cluster
 labeling, the Bloom build, the BPE merge table, the trained k-means
-codebooks) share it through a key. ``build`` runs inside its own scope,
-which is *not* the entry's: what the build pins or owns stays alive
-until the key is evicted or ``clear_memo()`` runs, so memo frames
-outlive the entry that built them and every other resource dies with
-its entry. Keys are per application (the application id is prepended),
+codebooks, the BM25 top 20) share it through a key. ``build`` runs
+inside its own scope, which is *not* the entry's: what the build pins or
+owns stays alive until the key is evicted or ``clear_memo()`` runs, so
+memo frames outlive the entry that built them and every other resource
+dies with its entry. Keys are per application (the application id is prepended),
 so a new session never sees frames of a stopped one. The bound is
 ``MEMO_BOUND`` keys, evicted first in, first out: one catalog pass over
-one scale-factor directory creates five keys (cluster labels, Bloom
-parts, BPE merges, the flat and the two-level codebook), so sixteen
-keys hold three directories' passes — a test session or tool that
-interleaves sf0.001, sf0.01 and the fixtures never evicts — while still
-bounding a long-lived process that walks many directories.
+one scale-factor directory creates six keys (cluster labels, Bloom
+parts, BPE merges, the flat and the two-level codebook, the BM25 top
+20), so eighteen keys hold three directories' passes — a test session
+or tool that interleaves sf0.001, sf0.01 and the fixtures never evicts
+— while still bounding a long-lived process that walks many
+directories.
 """
 
 from __future__ import annotations
@@ -58,6 +61,7 @@ from __future__ import annotations
 import shutil
 import tempfile
 import threading
+import time
 from collections.abc import Callable
 from pathlib import Path
 from typing import Any
@@ -66,7 +70,7 @@ from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame, SparkSession
 
 #: FIFO bound of the memo (keys); see the module docstring for the sizing
-MEMO_BOUND = 16
+MEMO_BOUND = 18
 
 _local = threading.local()
 _MEMO: dict[tuple, tuple[Any, QueryScope]] = {}
@@ -91,8 +95,52 @@ def _persist(df: DataFrame, count: bool) -> DataFrame:
     return df
 
 
+_ORPHANS_SWEPT = False
+
+
+def _sweep_stale_scratch(app_id: str, max_age_seconds: float = 3600.0) -> None:
+    """Once per process, drop htdp_* scratch trees (stream checkpoints,
+    blob containers, e2e sink dirs) left by DEAD sessions: a different
+    applicationId AND untouched for an hour (the age guard keeps a
+    concurrent live session's scratch safe)."""
+    global _ORPHANS_SWEPT
+    if _ORPHANS_SWEPT:
+        return
+    _ORPHANS_SWEPT = True
+
+    def _tree_is_live(root: Path, cutoff: float) -> bool:
+        # POSIX mtime does NOT propagate upward: a stream writing into
+        # out/ or ckpt/ leaves the scratch ROOT's mtime at creation time,
+        # so a >1h-running concurrent session would look dead by the root
+        # stat alone and get its live checkpoint rmtree'd. Liveness is
+        # ANY fresh mtime in the tree — return on the first one found,
+        # so a big live checkpoint costs O(1)-ish stats; only genuinely
+        # dead trees (about to be removed anyway) pay the full walk.
+        if root.stat().st_mtime >= cutoff:
+            return True
+        for p in root.rglob("*"):
+            try:
+                if p.stat().st_mtime >= cutoff:
+                    return True
+            except OSError:  # file vanished mid-walk (live writer) = alive
+                return True
+        return False
+
+    cutoff = time.time() - max_age_seconds
+    for d in Path(tempfile.gettempdir()).glob("htdp_*"):
+        try:
+            if not d.name.endswith(app_id) and not _tree_is_live(d, cutoff):
+                shutil.rmtree(d, ignore_errors=True)
+        except OSError:
+            continue
+
+
 def _scratch_path(spark: SparkSession, name: str) -> Path:
-    return Path(tempfile.gettempdir()) / f"htdp_{name}_{spark.sparkContext.applicationId}"
+    """The one place that mints ``htdp_*`` names; the first call in a
+    process also sweeps dead sessions' trees (``_sweep_stale_scratch``)."""
+    app_id = spark.sparkContext.applicationId
+    _sweep_stale_scratch(app_id)
+    return Path(tempfile.gettempdir()) / f"htdp_{name}_{app_id}"
 
 
 class QueryScope:

@@ -17,4 +17,4 @@ from .windows import (  # noqa: F401
     tumbling_window_stats,
 )
 from .polling import latest_status_stream, terminal_jobs  # noqa: F401
-from .progress import CountingListener, with_observed_metrics  # noqa: F401
+from .progress import ProgressListener, with_observed_metrics  # noqa: F401

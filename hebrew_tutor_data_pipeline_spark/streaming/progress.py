@@ -10,7 +10,7 @@ counters.
 
 from __future__ import annotations
 
-import threading
+import json
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,51 +29,30 @@ def with_observed_metrics(df: DataFrame, name: str = "progress") -> DataFrame:
     )
 
 
-class CountingListener(StreamingQueryListener):
-    """Collects per-batch row counts and observed metrics — the T5
-    progress surface. Thread-safe; read ``.progress`` after the query
-    stops (or live)."""
+class ProgressListener(StreamingQueryListener):
+    """The T5 progress surface: appends every stream progress event,
+    parsed from its JSON, to ``progress`` (``name``, ``runId``,
+    ``batchId``, ``numInputRows``, ``durationMs``, ``stateOperators``,
+    ``observedMetrics``, ...). The listener bus is session-wide, so a
+    consumer filters to its own query by ``name`` or ``runId``. Events
+    arrive on the listener-bus thread: a reader that needs every event
+    of a finished run drains the bus first
+    (``spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()``)."""
 
     def __init__(self) -> None:
-        self._lock = threading.Lock()
         self.progress: list[dict] = []
-        self.started: list[str] = []
-        self.terminated: list[str] = []
 
     def onQueryStarted(self, event) -> None:
-        with self._lock:
-            self.started.append(str(event.id))
+        pass
 
     def onQueryProgress(self, event) -> None:
-        p = event.progress
-        with self._lock:
-            self.progress.append(
-                {
-                    # identity fields so a consumer can filter to ITS
-                    # query — the listener bus is session-wide, and a
-                    # concurrent stream's batches would otherwise be
-                    # silently counted into another query's metrics
-                    "name": p.name,
-                    "runId": str(p.runId),
-                    "batchId": p.batchId,
-                    "numInputRows": p.numInputRows,
-                    "observedMetrics": {
-                        k: v.asDict() if hasattr(v, "asDict") else dict(v)
-                        for k, v in (p.observedMetrics or {}).items()
-                    },
-                }
-            )
+        self.progress.append(json.loads(event.progress.json))
 
-    def onQueryIdle(self, event) -> None:  # pragma: no cover - timing dependent
+    def onQueryIdle(self, event) -> None:
         pass
 
     def onQueryTerminated(self, event) -> None:
-        with self._lock:
-            self.terminated.append(str(event.id))
-
-    def total_input_rows(self) -> int:
-        with self._lock:
-            return sum(p["numInputRows"] for p in self.progress)
+        pass
 
 
 def running_eta(

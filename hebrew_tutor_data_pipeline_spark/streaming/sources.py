@@ -8,6 +8,8 @@ unbounded-append model with replay and exactly-once bookkeeping.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -95,69 +97,19 @@ def events_parquet_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
-def scratch_key_for(sf_dir: str) -> str:
-    """Deterministic per-dataset scratch key. NOT Python ``hash()`` —
-    that's PYTHONHASHSEED-salted, so every process would mint a fresh
-    scratch path and dead sessions would strand orphans in /tmp."""
-    import hashlib
-
-    return hashlib.md5(sf_dir.encode("utf-8")).hexdigest()[:12]
-
-
-_ORPHANS_SWEPT = False
-
-
-def _sweep_stale_scratch(app_id: str, max_age_seconds: float = 3600.0) -> None:
-    """Once per process, drop htdp_* scratch trees (stream checkpoints,
-    blob containers, e2e sink dirs) left by DEAD sessions: a different
-    applicationId AND untouched for an hour (the age guard keeps a
-    concurrent live session's scratch safe)."""
-    global _ORPHANS_SWEPT
-    if _ORPHANS_SWEPT:
-        return
-    _ORPHANS_SWEPT = True
-    import shutil
-    import tempfile
-    import time
-    from pathlib import Path
-
-    def _tree_is_live(root: Path, cutoff: float) -> bool:
-        # POSIX mtime does NOT propagate upward: a stream writing into
-        # out/ or ckpt/ leaves the scratch ROOT's mtime at creation time,
-        # so a >1h-running concurrent session would look dead by the root
-        # stat alone and get its live checkpoint rmtree'd. Liveness is
-        # ANY fresh mtime in the tree — return on the first one found,
-        # so a big live checkpoint costs O(1)-ish stats; only genuinely
-        # dead trees (about to be removed anyway) pay the full walk.
-        if root.stat().st_mtime >= cutoff:
-            return True
-        for p in root.rglob("*"):
-            try:
-                if p.stat().st_mtime >= cutoff:
-                    return True
-            except OSError:  # file vanished mid-walk (live writer) = alive
-                return True
-        return False
-
-    cutoff = time.time() - max_age_seconds
-    for d in Path(tempfile.gettempdir()).glob("htdp_*"):
-        try:
-            if not d.name.endswith(app_id) and not _tree_is_live(d, cutoff):
-                shutil.rmtree(d, ignore_errors=True)
-        except OSError:
-            continue
-
-
-#: Per-query state store backend for every stream this runner starts.
-#: The default HDFSBackedStateStoreProvider keeps EVERY key's state as
-#: JVM objects on the executor heap — at 100× key cardinality that is
-#: executor OOM, not a tuning problem. RocksDB keeps state off-heap
-#: with block-cache-bounded memory and incremental checkpoints; Spark
-#: bundles rocksdbjni, so this is a pure conf flip. Measured:
-#: tools/state_probe.py / bench_runs/r07_state_store.json.
+#: State store backend of every stream this runner starts. The default
+#: HDFSBackedStateStoreProvider keeps EVERY key's state as JVM objects on
+#: the executor heap — at 100× key cardinality that is executor OOM, not
+#: a tuning problem. RocksDB keeps state off-heap with block-cache-bounded
+#: memory and incremental checkpoints; Spark bundles rocksdbjni, so this
+#: is a pure conf flip. Measured: bench_runs/r07_state_store.json (10^7
+#: distinct dedup keys: 3.6 GB on-heap for the default, 282 MB for RocksDB).
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+
+#: seconds an availableNow run may take before the runner stops it
+TIMEOUT_SECONDS = 600
 
 #: rows of stream input one state partition should absorb before another
 #: partition is worth its per-microbatch cost (a RocksDB instance open +
@@ -197,30 +149,69 @@ def state_partitions_for(input_rows: int, default: int) -> int:
     return min(default, max(4, math.ceil(input_rows / STATE_TARGET_ROWS_PER_PARTITION)))
 
 
-def keeps_no_data_batches(df: DataFrame, output_mode: str) -> bool:
-    """Whether a no-data micro-batch of the stream ``df`` could emit a
-    row, read from its analyzed plan (zero jobs). Only a watermark
-    advance with no new input can close something, and only these
-    streaming nodes emit on a close: an ``Aggregate`` outside
+class StreamSettings(NamedTuple):
+    """What the runner reads from a stream's analyzed plan."""
+
+    keep_no_data: bool
+    input_rows: int | None
+
+
+def _footer_rows(path: str, glob: str | None) -> int | None:
+    """Rows of the parquet files directly under the directory ``path``
+    whose names match ``glob`` (a file source's ``pathGlobFilter``), from
+    their footers. Names starting with ``_`` or ``.`` are skipped, as
+    Spark skips them (``_SUCCESS``, ``.crc``). None when ``path`` is not
+    a local directory."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    if not Path(path).is_dir():
+        return None
+    return sum(
+        pq.ParquetFile(str(f)).metadata.num_rows
+        for f in Path(path).glob(glob or "*")
+        if f.is_file() and not f.name.startswith(("_", "."))
+    )
+
+
+def stream_settings(df: DataFrame, output_mode: str) -> StreamSettings:
+    """The runner's settings for the stream ``df``, read in one walk of
+    its analyzed plan (zero jobs).
+
+    ``keep_no_data``: whether a no-data micro-batch could emit a row.
+    Only a watermark advance with no new input can close something, and
+    only these streaming nodes emit on a close: an ``Aggregate`` outside
     ``complete`` mode (windows finalized by the watermark), a
     stream-stream ``Join`` that is not ``Inner`` (outer/semi rows
     emitted at state eviction), a ``*WithState`` node with
     ``EventTimeTimeout`` and any ``TransformWithState*`` node (timers).
     Everything else — complete-mode aggregates, dedup, inner joins,
-    stateless plans — only evicts state in such a batch.
-
-    A processing-time timeout fires only in the batches that follow the
+    stateless plans — only evicts state in such a batch. A
+    processing-time timeout fires only in the batches that follow the
     data, so a stream holding one would never finish under
     ``availableNow`` unless its no-data batches are dropped; a plan that
-    has one AND needs its no-data batches raises ``ValueError``."""
+    has one AND needs its no-data batches raises ``ValueError``.
+
+    ``input_rows``: the rows the plan's parquet file-source leaves read,
+    summed from parquet footers over the DISTINCT (``path``,
+    ``pathGlobFilter``) pairs of their options — the interval joins read
+    ``events`` twice and count it once. None when the plan has no
+    parquet file leaf (the pyds chapter stream, a rate source) or one
+    whose path is not a local directory."""
     nodes = [df._jdf.queryExecution().analyzed()]
     for node in nodes:  # grows while iterated: walks the whole tree
         kids = node.children()
         nodes.extend(kids.apply(i) for i in range(kids.size()))
     keep = processing_timeout = False
+    leaves: set[tuple[str, str | None]] = set()
     for node in (n for n in nodes if n.isStreaming()):
         name = node.getClass().getSimpleName()
-        if name.startswith("TransformWithState"):
+        if name == "StreamingRelation" and node.dataSource().className() == "parquet":
+            opts = node.dataSource().options()
+            glob = opts.apply("pathGlobFilter") if opts.contains("pathGlobFilter") else None
+            leaves.add((opts.apply("path"), glob))
+        elif name.startswith("TransformWithState"):
             keep = True
         elif name.endswith("WithState"):
             timeout = node.timeout().toString()
@@ -232,21 +223,28 @@ def keeps_no_data_batches(df: DataFrame, output_mode: str) -> bool:
             keep |= node.joinType().toString() != "Inner"
     if keep and processing_timeout:
         raise ValueError("processing-time timeout + no-data batches: would never finish")
-    return keep
+    rows = [_footer_rows(path, glob) for path, glob in leaves]
+    return StreamSettings(keep, sum(rows) if rows and None not in rows else None)
 
 
-def run_available_now_to_parquet(
-    df: DataFrame,
-    scratch_key: str,
-    output_mode: str,
-    query_name: str,
-    timeout_seconds: int = 600,
-    state_store_provider: str | None = ROCKSDB_PROVIDER,
-    input_rows: int | None = None,
-) -> DataFrame:
+def run_available_now_to_parquet(df: DataFrame, output_mode: str, query_name: str) -> DataFrame:
     """Execute a streaming frame with the availableNow trigger into a
     parquet sink via foreachBatch and return the committed result as a
     batch frame.
+
+    The caller names the plan, its output mode and the query; the runner
+    works out the rest itself, from one walk of the analyzed plan
+    (``stream_settings``, zero jobs) and fixed choices:
+
+    - state partitions: ``state_partitions_for`` of the rows the plan's
+      parquet leaves read, per their footers; no override when the plan
+      has no parquet file leaf;
+    - the trailing no-data micro-batch: run only where it can emit a row
+      (below);
+    - the state store: RocksDB (``ROCKSDB_PROVIDER``);
+    - the work dir: ``scratch(spark, "stream_<query_name>")``, already
+      per application and per query, cleared on start;
+    - the run is stopped after ``TIMEOUT_SECONDS``.
 
     Sink discipline per mode, idempotent under micro-batch RETRY (a
     foreachBatch body can run twice for one batchId after a transient
@@ -266,25 +264,23 @@ def run_available_now_to_parquet(
     state-partition override right after ``start()``.
 
     The trailing no-data micro-batch (run after the data to apply the
-    advanced watermark) is kept only where it can emit a row — see
-    ``keeps_no_data_batches``: append-mode aggregates, non-inner
-    stream-stream joins, event-time timeouts and transformWithState.
-    Every other stream runs its data batches alone; the skipped batch
-    would only evict state into a checkpoint deleted right after the
-    run. Skipping it took the user-keyed interval join's median from
-    2.92 to 2.13 s on a 4-core VM (bench_runs/r16_no_dead_rounds_ab.json).
-    The returned frame is the output of the batches that ran. A
-    processing-time-timeout stream therefore ends by itself under
-    availableNow, before any timeout can fire a nondeterministic late
-    row. A production deployment swaps the sink body for its real
-    writer; the plan above it is unchanged."""
+    advanced watermark) is kept only where it can emit a row: append-mode
+    aggregates, non-inner stream-stream joins, event-time timeouts and
+    transformWithState. Every other stream runs its data batches alone;
+    the skipped batch would only evict state into a checkpoint deleted
+    right after the run. Skipping it took the user-keyed interval join's
+    median from 2.92 to 2.13 s on a 4-core VM
+    (bench_runs/r16_no_dead_rounds_ab.json). The returned frame is the
+    output of the batches that ran. A processing-time-timeout stream
+    therefore ends by itself under availableNow, before any timeout can
+    fire a nondeterministic late row. A production deployment swaps the
+    sink body for its real writer; the plan above it is unchanged."""
     import shutil
     from pathlib import Path
 
-    keep_no_data = keeps_no_data_batches(df, output_mode)
+    settings = stream_settings(df, output_mode)
     spark = df.sparkSession
-    _sweep_stale_scratch(spark.sparkContext.applicationId)
-    work = scratch(spark, f"stream_{query_name}") / scratch_key
+    work = scratch(spark, f"stream_{query_name}")
     shutil.rmtree(work, ignore_errors=True)
     out = str(work / "out")
     ckpt = str(work / "ckpt")
@@ -293,12 +289,11 @@ def run_available_now_to_parquet(
         path = out if output_mode == "complete" else f"{out}/batch_id={batch_id}"
         batch_df.write.mode("overwrite").parquet(path)
 
-    if state_store_provider:
-        # session conf is captured per-query at start — affects only
-        # streams started after this point, never a running query
-        set_conf(spark, "spark.sql.streaming.stateStore.providerClass", state_store_provider)
+    # session conf is captured per-query at start — affects only
+    # streams started after this point, never a running query
+    set_conf(spark, "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
     with QueryScope(spark) as start_scope:
-        if input_rows is not None:
+        if settings.input_rows is not None:
             # size state partitions to the bounded input
             # (state_partitions_for rationale above); the conf is cloned
             # into the query at start(), so restoring right after never
@@ -306,10 +301,10 @@ def run_available_now_to_parquet(
             # (scratch cleared above), so the partition count frozen into
             # the checkpoint can never conflict with a later run's choice.
             default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            parts = state_partitions_for(input_rows, default)
+            parts = state_partitions_for(settings.input_rows, default)
             if parts != default:
                 start_scope.set_conf("spark.sql.shuffle.partitions", str(parts))
-        if not keep_no_data:
+        if not settings.keep_no_data:
             start_scope.set_conf("spark.sql.streaming.noDataMicroBatches.enabled", "false")
         q = (
             df.writeStream.outputMode(output_mode)
@@ -320,7 +315,7 @@ def run_available_now_to_parquet(
             .start()
         )
     try:
-        if not q.awaitTermination(timeout_seconds):
+        if not q.awaitTermination(TIMEOUT_SECONDS):
             raise TimeoutError(f"{query_name}: stream did not finish")
     finally:
         q.stop()

@@ -140,6 +140,40 @@ class TestRotation:
         assert sorted(updated) == ["a", "c"]
         assert dropped == ["gone"]
 
+    def test_refresh_refuses_after_package_edit(self, tmp_path, monkeypatch):
+        """tools/refresh_oracle_hashes.package_edits_after: once the
+        latest CORRECTNESS file has landed, a commit touching the
+        package (or an uncommitted package edit) makes the live tree
+        one no correctness record covers; edits elsewhere do not."""
+        import subprocess
+
+        from tools.refresh_oracle_hashes import PACKAGE, package_edits_after
+
+        for var in ("AUTHOR", "COMMITTER"):
+            monkeypatch.setenv(f"GIT_{var}_NAME", "t")
+            monkeypatch.setenv(f"GIT_{var}_EMAIL", "t@example.com")
+
+        def commit(path: str, text: str, msg: str) -> None:
+            f = tmp_path / path
+            f.parent.mkdir(parents=True, exist_ok=True)
+            f.write_text(text)
+            subprocess.run(["git", "-C", str(tmp_path), "add", path], check=True)
+            subprocess.run(["git", "-C", str(tmp_path), "commit", "-qm", msg], check=True)
+
+        subprocess.run(["git", "init", "-q", str(tmp_path)], check=True)
+        commit(f"{PACKAGE}/a.py", "x = 1\n", "package")
+        record = tmp_path / "CORRECTNESS_r01.json"
+        commit(record.name, "{}", "round 1")
+        commit("NOTES.md", "docs\n", "docs only")
+        assert package_edits_after(record, tmp_path) == []
+        (tmp_path / PACKAGE / "a.py").write_text("x = 2\n")
+        assert package_edits_after(record, tmp_path) == ["uncommitted changes"]
+        commit(f"{PACKAGE}/a.py", "x = 2\n", "edit")
+        edits = package_edits_after(record, tmp_path)
+        assert len(edits) == 1 and edits[0].endswith(" edit")
+        commit("CORRECTNESS_r02.json", "{}", "round 2")
+        assert package_edits_after(tmp_path / "CORRECTNESS_r02.json", tmp_path) == []
+
     def test_live_changed_entries_are_in_window(self):
         """Integration form: every entry the committed snapshot flags as
         changed (oracle text ≠ hash at last green) is inside the live

@@ -7,7 +7,8 @@ import json
 
 import pytest
 
-from hebrew_tutor_data_pipeline_spark.metrics import ProgressListener, fold, run_entry
+from hebrew_tutor_data_pipeline_spark.metrics import fold, run_entry
+from hebrew_tutor_data_pipeline_spark.streaming.progress import ProgressListener
 from perfbench.trace import Tracer
 from tests.conftest import SF_SMOKE
 

@@ -137,8 +137,9 @@ class TestMemo:
 #: one entry per resource kind: eager and lazy pins (curation, pagerank,
 #: the quotient that rode pagerank's leaked cache), the cluster memo
 #: pair with its connected-components checkpoint, the Bloom memo, the
-#: pyds filter-pushdown conf, trimmer scratch trees and a RocksDB stream
-#: with its shuffle-partition override and checkpoint scratch
+#: pyds filter-pushdown conf, trimmer scratch trees, a RocksDB stream
+#: with its shuffle-partition override and checkpoint scratch, and the
+#: BM25 memo with two of its consumers (one builds it, one reads it)
 HERMETIC_ENTRIES = (
     "curation_refresh_e2e",
     "pagerank_neardup_graph",
@@ -149,6 +150,8 @@ HERMETIC_ENTRIES = (
     "chapter_source_pyds",
     "trimmer_pipeline_e2e",
     "streaming_session_windows",
+    "bm25_keyword_topk",
+    "hybrid_rrf_fusion",
 )
 
 

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from hebrew_tutor_data_pipeline_spark.sources.readers import load_table
 from hebrew_tutor_data_pipeline_spark.streaming import (
-    CountingListener,
+    ProgressListener,
     events_file_stream,
     session_window_stats,
     terminal_jobs,
@@ -179,8 +179,8 @@ class TestStatefulPolling:
         got = {
             r["job_id"]: (r["final_status"], r["n_updates"])
             for r in run_available_now_to_parquet(
-                terminal_jobs(stream), scratch_key=uuid.uuid4().hex[:8],
-                output_mode="append", query_name="terminal_jobs_test",
+                terminal_jobs(stream), output_mode="append",
+                query_name="terminal_jobs_test",
             ).collect()
         }
         assert got == {"job1": ("Succeeded", 3), "job2": ("Failed", 2)}
@@ -190,7 +190,7 @@ class TestStatefulPolling:
 
 class TestProgress:
     def test_listener_and_observe(self, spark, events_dir):
-        listener = CountingListener()
+        listener = ProgressListener()
         spark.streams.addListener(listener)
         try:
             stream = with_observed_metrics(
@@ -198,17 +198,19 @@ class TestProgress:
             )
             out = tumbling_window_stats(stream, window_duration="6 hours")
             name = f"obs_{uuid.uuid4().hex[:8]}"
-            q = run_available_now(out, name)
-            time.sleep(1)  # listener events are async
+            run_available_now(out, name)
+            # listener events are async: drain the listener bus
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
             n_input = spark.read.schema(
                 "event_id long, ts timestamp, user_id long, event_type string,"
                 " value double, props string"
             ).json(events_dir).count()
-            assert listener.total_input_rows() == n_input
+            mine = [p for p in listener.progress if p["name"] == name]
+            assert sum(p["numInputRows"] for p in mine) == n_input
             observed = [
                 p["observedMetrics"]["progress"]["rows_seen"]
-                for p in listener.progress
-                if "progress" in p["observedMetrics"]
+                for p in mine
+                if "progress" in p.get("observedMetrics", {})
             ]
             assert sum(observed) == n_input
         finally:
@@ -704,48 +706,6 @@ class TestCatalogStreamingEntries:
         assert got == want
         assert len(got) > 0
 
-    def test_terminal_jobs_tws_equals_legacy_surface(self, spark):
-        """Spark 4's transformWithStateInPandas twin must match the
-        applyInPandasWithState operator on the same stream. The TWS
-        state protocol needs protobuf, which this container does not
-        ship — skip (not fail) where absent; the operator itself is
-        complete and runs wherever protobuf exists."""
-        import pytest
-
-        try:
-            import google.protobuf  # noqa: F401
-        except ImportError:
-            pytest.skip("protobuf not installed (TWS state protocol)")
-        from hebrew_tutor_data_pipeline_spark.plans.catalog import (
-            streaming_terminal_job_status,
-        )
-        from hebrew_tutor_data_pipeline_spark.streaming.polling import (
-            terminal_jobs_tws,
-        )
-        from hebrew_tutor_data_pipeline_spark.streaming.sources import (
-            events_parquet_stream,
-            run_available_now_to_parquet,
-        )
-
-        updates = events_parquet_stream(spark, self.SF).select(
-            F.col("user_id").cast("string").alias("job_id"),
-            F.when(F.col("event_type") == "error", "Failed")
-            .when(F.col("event_type") == "purchase", "Succeeded")
-            .otherwise("Running")
-            .alias("status"),
-            "ts",
-        )
-        got = run_available_now_to_parquet(
-            terminal_jobs_tws(updates),
-            scratch_key="tws_test",
-            output_mode="append",
-            query_name="terminal_jobs_tws_test",
-        )
-        want = streaming_terminal_job_status(spark, self.SF)
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-
     def test_append_sink_batch_retry_is_idempotent(self, spark, tmp_path):
         """A foreachBatch body can be re-invoked for the SAME batchId
         after a transient failure; the per-batch overwrite layout must
@@ -776,17 +736,16 @@ class TestCatalogStreamingEntries:
             "event_id", "value"
         )
         got = run_available_now_to_parquet(
-            s, scratch_key="zerorow", output_mode="append",
-            query_name="zero_row_probe",
+            s, output_mode="append", query_name="zero_row_probe",
         )
         assert got.count() == 0
         assert got.columns == ["event_id", "value"]
 
 
 class TestNoDataBatchGate:
-    """streaming.sources.keeps_no_data_batches: the runner keeps the
-    trailing no-data micro-batch only for plans where it can emit a row;
-    every other stream runs its data batches alone."""
+    """streaming.sources.stream_settings(...).keep_no_data: the runner
+    keeps the trailing no-data micro-batch only for plans where it can
+    emit a row; every other stream runs its data batches alone."""
 
     def test_catalog_streams_skip_the_no_data_batch(self, spark, monkeypatch):
         from hebrew_tutor_data_pipeline_spark.plans import CATALOG
@@ -797,8 +756,8 @@ class TestNoDataBatchGate:
 
         seen = {}
 
-        def capture(df, scratch_key, output_mode, query_name, **kw):
-            seen[query_name] = sources.keeps_no_data_batches(df, output_mode)
+        def capture(df, output_mode, query_name):
+            seen[query_name] = sources.stream_settings(df, output_mode)
             raise Captured
 
         monkeypatch.setattr(sources, "run_available_now_to_parquet", capture)
@@ -807,19 +766,27 @@ class TestNoDataBatchGate:
             with pytest.raises(Captured):
                 CATALOG[name].spark(spark, SF)
         assert len(names) == len(seen) == 10
-        assert not any(seen.values()), seen
+        assert not any(st.keep_no_data for st in seen.values()), seen
+        # every events stream sizes its state partitions from the events
+        # table (counted once in the self-joins); the pyds stream has no
+        # parquet leaf and gets no override
+        events = sources.parquet_num_rows(SF, "events")
+        assert {q: st.input_rows for q, st in seen.items()} == {
+            q: None if q == "chapter_source_pyds_stream" else events for q in seen
+        }
 
     def test_plans_that_can_emit_keep_it(self, spark):
         import pandas as pd
         from pyspark.sql.streaming.state import GroupStateTimeout
+        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-        from hebrew_tutor_data_pipeline_spark.streaming.polling import (
-            terminal_jobs_tws,
-        )
         from hebrew_tutor_data_pipeline_spark.streaming.sources import (
             events_parquet_stream,
-            keeps_no_data_batches,
+            stream_settings,
         )
+
+        def keeps_no_data_batches(df, output_mode):
+            return stream_settings(df, output_mode).keep_no_data
 
         ev = events_parquet_stream(spark, SF)
         wm = ev.withWatermark("ts", "10 minutes")
@@ -842,16 +809,26 @@ class TestNoDataBatchGate:
             emit_key, "user_id long", "n long", "append",
             GroupStateTimeout.EventTimeTimeout,
         )
-        updates = ev.select(
-            F.col("user_id").cast("string").alias("job_id"),
-            F.col("event_type").alias("status"),
-            "ts",
+        class Noop(StatefulProcessor):
+            # building the plan needs no protobuf; running it would
+            def init(self, handle):
+                pass
+
+            def handleInputRows(self, key, rows, timer_values):
+                yield from ()
+
+            def close(self):
+                pass
+
+        tws = ev.groupBy("user_id").transformWithStateInPandas(
+            statefulProcessor=Noop(), outputStructType="user_id long",
+            outputMode="append", timeMode="none",
         )
         assert keeps_no_data_batches(tumbling, "append")
         assert not keeps_no_data_batches(tumbling, "complete")
         assert keeps_no_data_batches(left_outer, "append")
         assert keeps_no_data_batches(event_time, "append")
-        assert keeps_no_data_batches(terminal_jobs_tws(updates), "append")
+        assert keeps_no_data_batches(tws, "append")
 
     def test_processing_timeout_that_needs_no_data_batches_raises(self, spark):
         from hebrew_tutor_data_pipeline_spark.streaming.sources import (
@@ -867,8 +844,7 @@ class TestNoDataBatchGate:
         per_status = terminal_jobs(updates).groupBy("final_status").count()
         with pytest.raises(ValueError, match="never finish"):
             run_available_now_to_parquet(
-                per_status, scratch_key="gate_raise", output_mode="append",
-                query_name="gate_raise_test",
+                per_status, output_mode="append", query_name="gate_raise_test",
             )
         assert all(q.name != "gate_raise_test" for q in spark.streams.active)
 
@@ -882,7 +858,6 @@ class TestNoDataBatchGate:
             tumbling_window_stats(
                 events_parquet_stream(spark, SF), window_duration="1 hour"
             ),
-            scratch_key="gate_append_tumble",
             output_mode="append",
             query_name="gate_append_tumble_test",
         )
@@ -905,13 +880,12 @@ class TestNoDataBatchGate:
         from tools.parity import table_hash
 
         spec = CATALOG["streaming_user_clicks_purchase_windows"]
-        listener = CountingListener()
+        listener = ProgressListener()
         spark.streams.addListener(listener)
         try:
             got = spec.spark(spark, SF)
-            deadline = time.time() + 30
-            while not listener.terminated and time.time() < deadline:
-                time.sleep(0.1)  # listener events are async
+            # listener events are async: drain the listener bus
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         finally:
             spark.streams.removeListener(listener)
         batches = [
@@ -936,7 +910,7 @@ class TestScratchSweep:
         import os
         import time
 
-        from hebrew_tutor_data_pipeline_spark.streaming import sources as src
+        from hebrew_tutor_data_pipeline_spark import scope as src
 
         monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
         old = time.time() - 7200
@@ -959,7 +933,7 @@ class TestScratchSweep:
         import os
         import time
 
-        from hebrew_tutor_data_pipeline_spark.streaming import sources as src
+        from hebrew_tutor_data_pipeline_spark import scope as src
 
         monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
         mine = tmp_path / "htdp_x_thisapp"
@@ -1000,24 +974,58 @@ class TestStatePartitionKnob:
         n = parquet_num_rows(sf_dir, "events")
         assert n == load_table(spark, sf_dir, "events").count()
 
+    def test_input_rows_read_from_the_plan_on_both_layouts(self, spark, tmp_path):
+        """The runner's input-row count comes from the footers of the
+        parquet files the stream's own plan scans: the flat layout (the
+        directory plus a pathGlobFilter) and a directory of part files
+        count the same rows, and a self-join counts its table once."""
+        import pyarrow.parquet as pq
+
+        from hebrew_tutor_data_pipeline_spark.streaming.sources import (
+            events_parquet_stream,
+            parquet_num_rows,
+            stream_settings,
+        )
+
+        n = parquet_num_rows(SF, "events")
+        flat = events_parquet_stream(spark, SF)
+        assert stream_settings(flat, "append").input_rows == n
+        self_join = flat.alias("a").join(
+            events_parquet_stream(spark, SF).alias("b"), "user_id"
+        )
+        assert stream_settings(self_join, "append").input_rows == n
+        parts = tmp_path / "events.parquet"
+        parts.mkdir()
+        table = pq.read_table(f"{SF}/events.parquet")
+        third = len(table) // 3
+        for i, lo in enumerate((0, third, 2 * third)):
+            hi = len(table) if i == 2 else lo + third
+            pq.write_table(table.slice(lo, hi - lo), parts / f"part-{i}.parquet")
+        (parts / "_SUCCESS").write_text("")
+        stream = events_parquet_stream(spark, str(tmp_path))
+        assert parquet_num_rows(str(tmp_path), "events") == n
+        assert stream_settings(stream, "append").input_rows == n
+
     def test_knob_restores_session_conf(self, spark, tmp_path):
-        """run_available_now_to_parquet with input_rows must leave the
-        session's shuffle.partitions exactly as it found it, even
-        though the started query captured the derived value."""
+        """The derived state-partition override (4, from a 10-row input
+        under a session default of 8) must leave the session's
+        shuffle.partitions exactly as it found it, even though the
+        started query captured the derived value."""
+        from hebrew_tutor_data_pipeline_spark.scope import QueryScope
         from hebrew_tutor_data_pipeline_spark.streaming.sources import (
             run_available_now_to_parquet,
+            stream_settings,
         )
 
         src = tmp_path / "in"
         spark.range(10).selectExpr("id", "id * 2 AS v").write.parquet(str(src))
         stream = spark.readStream.schema("id long, v long").parquet(str(src))
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        out = run_available_now_to_parquet(
-            stream.groupBy("id").count(),
-            scratch_key="knob_restore_test",
-            output_mode="complete",
-            query_name="knob_restore_test",
-            input_rows=10,
-        )
-        assert out.count() == 10
-        assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        agg = stream.groupBy("id").count()
+        assert stream_settings(agg, "complete").input_rows == 10
+        with QueryScope(spark) as s:
+            s.set_conf("spark.sql.shuffle.partitions", "8")
+            out = run_available_now_to_parquet(
+                agg, output_mode="complete", query_name="knob_restore_test"
+            )
+            assert out.count() == 10
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "8"

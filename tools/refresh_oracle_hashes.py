@@ -12,6 +12,13 @@ would silently clear a changed flag without driver validation (exactly
 the gap VERDICT r12 #3 closed). Never-green entries stay absent: they
 already sort first in the rotation.
 
+The tool checks that precondition itself: it refuses, exit status 1,
+when any commit after the one that added the latest CORRECTNESS file
+touches the package, or the package has uncommitted changes
+(``--dry-run`` included). Such a tree is not the one the correctness
+record covers, and taking its fingerprints would clear changed flags
+without validation.
+
 Usage: python tools/refresh_oracle_hashes.py [--dry-run]
 """
 
@@ -19,11 +26,32 @@ from __future__ import annotations
 
 import json
 import re
+import subprocess
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+PACKAGE = "hebrew_tutor_data_pipeline_spark"
+
+
+def package_edits_after(record: Path, repo: Path = REPO) -> list[str]:
+    """Package edits no correctness record covers: the commits after the
+    one that added ``record`` that touch the package (``<hash>
+    <subject>``, newest first), plus ``"uncommitted changes"`` when the
+    package's working tree differs from HEAD."""
+
+    def git(*args: str) -> list[str]:
+        out = subprocess.run(
+            ["git", "-C", str(repo), *args], capture_output=True, text=True, check=True
+        ).stdout
+        return out.splitlines()
+
+    added = git("log", "--diff-filter=A", "--format=%H", "--", str(record))
+    edits = git("log", "--format=%h %s", f"{added[0]}..HEAD", "--", PACKAGE) if added else []
+    if git("status", "--porcelain", "--", PACKAGE):
+        edits.append("uncommitted changes")
+    return edits
 
 
 def merge_snapshot(
@@ -69,6 +97,13 @@ def main() -> int:
         print("no CORRECTNESS_r*.json records — nothing to refresh")
         return 1
     rnd, latest = records[-1]
+    edits = package_edits_after(latest)
+    if edits:
+        print(
+            f"refusing: {PACKAGE}/ changed after {latest.name} landed, so the live "
+            f"tree is not the one that record covers: {edits}"
+        )
+        return 1
     data = json.loads(latest.read_text())
     try:
         snap = json.loads(_HASH_SNAPSHOT.read_text())

@@ -28,15 +28,11 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from hebrew_tutor_data_pipeline_spark.metrics import (  # noqa: E402
-    ProgressListener,
-    event_log_conf,
-    fold,
-    run_entry,
-)
+from hebrew_tutor_data_pipeline_spark.metrics import event_log_conf, fold, run_entry  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.plans import CATALOG  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.scope import clear_memo  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.session import get_spark  # noqa: E402
+from hebrew_tutor_data_pipeline_spark.streaming.progress import ProgressListener  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.streaming.sources import (  # noqa: E402
     parquet_num_rows,
 )

@@ -180,9 +180,28 @@ def probe_crash_restart(out_root: Path) -> dict:
         spark.stop()
 
 
-def probe_big_state(n_keys: int, out_root: Path) -> dict:
-    from tools.state_probe import synth_events
+def synth_events(spark, n_keys: int, root: Path) -> str:
+    """n_keys rows, every row a DISTINCT dedup key (worst case for
+    state growth: nothing is ever evicted as a duplicate), event times
+    inside one watermark window so no state is dropped mid-run either —
+    the stream must HOLD n_keys state rows at its peak."""
+    out = root / f"events_{n_keys}"
+    if not (out / "_SUCCESS").exists():
+        (
+            spark.range(n_keys)
+            .selectExpr(
+                "id AS user_id",
+                "CAST(timestamp'2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0, id % 60) AS timestamp) AS ts",
+                "CAST(id AS STRING) AS event_type",
+            )
+            .coalesce(8)
+            .write.mode("overwrite")
+            .parquet(str(out))
+        )
+    return str(out)
 
+
+def probe_big_state(n_keys: int, out_root: Path) -> dict:
     spark = get_spark("state-100m")
     spark.sparkContext.setLogLevel("ERROR")
     try:
