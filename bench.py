@@ -93,7 +93,7 @@ SCALE_TIER_SKIPS: dict[str, tuple[float, str]] = {
 
 
 def main() -> int:
-    # not an htdp_* name: the stream runner sweeps those as stale scratch
+    # not an htdp_* name: scope._scratch_path sweeps those as stale scratch
     log_dir = tempfile.mkdtemp(prefix="bench_eventlog_")
     try:
         return run(log_dir)

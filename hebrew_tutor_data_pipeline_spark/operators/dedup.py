@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..functions.generate import explode_nonempty
 from ..scope import own, pin
+from ..sources.layout import plan_rows
 from ..functions.text import whitespace_token_count, whitespace_tokens, word_ngrams
 
 # Same constants as functions.text.doc_fingerprint — shared so oracle SQL
@@ -1429,6 +1430,12 @@ def simhash_lookup_pairs(
     )
 
 
+#: index rows (``plan_rows``) from which ``minhash_lookup_pairs``
+#: verifies on the semi-joined neighborhood instead of the whole index;
+#: set from one sf0.1 A/B (+7 jobs below it), crossover not yet measured
+SEMIJOIN_MIN_INDEX_ROWS = 100_000
+
+
 def minhash_lookup_pairs(
     batch: DataFrame,
     index: DataFrame,
@@ -1438,7 +1445,6 @@ def minhash_lookup_pairs(
     num_hashes: int = 32,
     bands: int = 16,
     threshold: float = 0.5,
-    index_rows: int | None = None,
 ) -> DataFrame:
     """Asymmetric MinHash-LSH lookup — the incremental face of the
     Jaccard candidate tier of record: every BATCH document's best
@@ -1457,16 +1463,18 @@ def minhash_lookup_pairs(
     you persist — this function re-derives it only because the sandbox
     has no standing store.
 
-    ``index_rows`` (callers derive it from parquet FOOTER metadata at
-    zero jobs — the established knob discipline) gates the
-    shingle-after-semi-join verification path: at ≥100k index rows the
-    second tokenize+ngram pass over the standing corpus dominates and
-    is cut to the collided neighborhood (guide §3.3 — join first on
-    the un-exploded key); below it the semi-join's extra candidate pin
-    and broadcast stages (+7 jobs measured at sf0.1) cost more than
-    the small second pass they save, so the plain two-pass form runs.
-    Both paths produce identical values — the semi-join only restricts
-    shingles to ids already present in the candidate set."""
+    The index's row statistic gates the shingle-after-semi-join
+    verification path: ``plan_rows(index)``, the rows of the files the
+    index reads (parquet footers, zero jobs — the whole table even when
+    the index is a filtered slice of it). At ``SEMIJOIN_MIN_INDEX_ROWS``
+    or more, the second tokenize+ngram pass over the standing corpus
+    dominates and is cut to the collided neighborhood (guide §3.3 —
+    join first on the un-exploded key); below it the semi-join's extra
+    candidate pin and broadcast stages (+7 jobs measured at sf0.1) cost
+    more than the small second pass they save, so the plain two-pass
+    form runs, as it does for an index with no file leaf. Both paths
+    produce identical values — the semi-join only restricts shingles
+    to ids already present in the candidate set."""
     if num_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must divide num_hashes ({num_hashes}) "
@@ -1488,7 +1496,8 @@ def minhash_lookup_pairs(
         .select("b_id", "x_id")
         .distinct()
     )
-    if index_rows is not None and index_rows >= 100_000:
+    index_rows = plan_rows(index)
+    if index_rows is not None and index_rows >= SEMIJOIN_MIN_INDEX_ROWS:
         # EAGER pin: cand gets three consumers on this path (the verify
         # join + one semi-join per shingle side) — lazy, AQE's
         # concurrent stage materialization would re-run the banding

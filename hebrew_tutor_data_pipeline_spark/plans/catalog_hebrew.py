@@ -1188,22 +1188,13 @@ def trimmer_intro_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     files, wf = _trimmer_waveforms(spark, FIXTURE_AUDIO_TREE)
     segs = audio_ops.rms_energy_segments(wf, segment_seconds=1.0)
-    # Persist the per-second RMS segments (one narrow numeric row per
-    # (file, second) — tiny vs the waveforms) exactly as the e2e twin
-    # does: threshold, suggestion, duration and the report each consume
-    # segs, and without the boundary the decode + 64× tile + quiet
-    # MapInPandas pipeline re-executes per consumer (5 MapInPandas / 10
-    # binaryFile scans in the r13 before-plan; guide §5 — cache when the
-    # recompute outweighs the cache). SCALE-CONDITIONAL like pagerank's
-    # fingerprint cache: on the committed ~KB fixture tree the 5 decodes
-    # are cheaper than the cache-fill jobs (measured: +5 jobs at sf0.1,
-    # wall flat), so the knob derives from the tree's byte size — a pure
-    # os.stat scan, zero Spark jobs (the footer-knob discipline).
-    tree_bytes = sum(
-        p.stat().st_size for p in Path(FIXTURE_AUDIO_TREE).glob("**/*.mp3")
-    )
-    if tree_bytes >= 32 << 20:
-        segs = pin(segs)  # concurrent AQE stages race a lazy boundary
+    # segs is NOT persisted, unlike the e2e twin: threshold, suggestion,
+    # duration and the report each consume it, so the decode + 64× tile
+    # + quiet MapInPandas pipeline re-executes per consumer (5
+    # MapInPandas / 10 binaryFile scans), but on the committed ~26 KB
+    # fixture tree those decodes are cheaper than the cache-fill jobs
+    # (measured: +5 jobs at sf0.1, wall flat). The tree is a fixed
+    # path, so no size gate could ever choose the pin here.
     thr = audio_ops.intro_threshold(segs, skip_segments=2, factor=0.3)
     sugg = audio_ops.suggest_intro_trim(
         segs, skip_segments=2, factor=0.3, buffer_seconds=0.25, min_trim=1.0

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions import hebrew, text, urls
 from ..functions.hashing import HASH_BASE, HASH_MOD
+from ..sources.layout import plan_rows
 from ..sources.readers import spread
 from ..operators import alignment, ann, dedup
 from ..operators import membership as membership_mod
@@ -871,36 +872,6 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HAMMING_MIN_BITS, _HAMMING_BASE_DOCS, _HAMMING_MAX_BITS = 16, 5000, 28
 
 
-def _corpus_rows(spark: SparkSession, sf_dir: str, table: str) -> int:
-    """Knob-sizing row count from parquet FOOTER metadata — zero Spark
-    jobs (optimization guide §1.2: derived-knob scalars should not cost
-    a cluster job each; the streaming runner's state-partition knob set
-    the precedent with the same ``parquet_num_rows`` probe). The footer
-    ``num_rows`` IS the table count, so every derived knob (bits, k)
-    and therefore every query result is byte-identical to the former
-    ``spread(T(...)).count()`` job — seven catalog entries each paid
-    that scan+exchange+agg job purely to size a knob. Falls back to the
-    count job when the footer probe cannot serve the path (non-parquet
-    layout, remote store without local stat access) — which is also the
-    honest 100 TB posture: a driver sequentially stat-ing thousands of
-    part footers would serialize what the distributed metadata count
-    parallelizes, so production deployments with huge file counts keep
-    the fallback and this fast path only fires for single-digit file
-    counts."""
-    from pathlib import Path
-
-    try:
-        p = Path(sf_dir) / f"{table}.parquet"
-        n_files = sum(1 for _ in p.glob("*.parquet")) if p.is_dir() else 1
-        if n_files <= 64:
-            from ..streaming.sources import parquet_num_rows
-
-            return parquet_num_rows(sf_dir, table)
-    except Exception:  # noqa: BLE001 — sizing must never fail the plan
-        pass
-    return T(spark, sf_dir, table).count()
-
-
 def _hamming_bits_for(n: int) -> int:
     """Twin of the SQL formula in simhash_hamming_pairs' ``p`` CTE."""
     import math
@@ -966,7 +937,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALE_TIER_SKIPS) — its 520.7 s at sf10 was a third of the whole
     r10 wall."""
     d = spread(T(spark, sf_dir, "documents"))
-    bits = _hamming_bits_for(_corpus_rows(spark, sf_dir, "documents"))
+    bits = _hamming_bits_for(plan_rows(d))
     return dedup.simhash_near_dup_pairs(
         d, "doc_id", "text", bits=bits, bands=4, max_distance=2
     )
@@ -1020,7 +991,7 @@ def simhash_neardup_quotient(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_clusters/pagerank quotient discipline applied to the pair
     report itself."""
     d = spread(T(spark, sf_dir, "documents"))
-    bits = _hamming_bits_for(_corpus_rows(spark, sf_dir, "documents"))
+    bits = _hamming_bits_for(plan_rows(d))
     return dedup.simhash_quotient_pairs(
         d, "doc_id", "text", bits=bits, bands=4, max_distance=2
     )
@@ -1096,7 +1067,7 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     PROVES the quotient algebra — the dedup_clusters discipline. All
     arithmetic is BIGINT div/sum, bit-identical by construction."""
     d = spread(T(spark, sf_dir, "documents"))
-    n = _corpus_rows(spark, sf_dir, "documents")
+    n = plan_rows(d)
     bits = _hamming_bits_for(n)
     fps = dedup.simhash(d, "doc_id", "text", bits)  # (id, simhash)
     # fps feeds BOTH the quotient aggregate and the final fan-back join.
@@ -1461,12 +1432,12 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     x10 to x100), while bits ≈ log2(n/250) holds expected bucket size
     at the 250-vector target and measured n^0.10 / 7.8 s at x100
     (bench_runs/r06_scaling_lsh_scaled.json, re-measured this round on
-    this entry directly). The sizing count is a single scalar job —
-    the same bounded-driver-read class as the k≤16 centroid collects;
-    at the small SFs the formula floors at 6 bits, so the derived and
-    historical plans coincide there."""
+    this entry directly). The corpus size is the frame's own
+    ``plan_rows`` (parquet footers, zero jobs); at the small SFs the
+    formula floors at 6 bits, so the derived and historical plans
+    coincide there."""
     e = spread(T(spark, sf_dir, "embeddings"))
-    bits = _lsh_bits_for(_corpus_rows(spark, sf_dir, "embeddings"))
+    bits = _lsh_bits_for(plan_rows(e))
     return dedup.embedding_near_dup_pairs(
         e, "vec_id", "embedding", threshold=0.35, bucket_bits=bits,
         num_tables=_LSH_TABLES,
@@ -1807,10 +1778,10 @@ def semantic_dedup_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     Θ(n²·d/250) — the confirmed r11 scale-killer (17.1× sf1→sf10 on
     the sibling cluster_balanced_sample) — while the two-level route
     is Θ(n·√k·d), with identical downstream semantics (block on cell,
-    prune within). The sizing count is one scalar job (bounded driver
-    read)."""
+    prune within). The corpus size is the frame's own ``plan_rows``
+    (parquet footers, zero jobs)."""
     e = spread(T(spark, sf_dir, "embeddings"))
-    k = _semdedup_k_for(_corpus_rows(spark, sf_dir, "embeddings"))
+    k = _semdedup_k_for(plan_rows(e))
     model = _embeddings_codebook2(spark, sf_dir, k=k)
     out = dedup.semantic_dedup(e, "vec_id", "embedding", codebook=model, tau=0.35)
     return out.withColumnRenamed("id", "vec_id")
@@ -1868,7 +1839,7 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Θ(n·√k·d) for training AND assignment, same derived cell
     population, oracle replays the exact two-level recurrence."""
     e = spread(T(spark, sf_dir, "embeddings"))
-    k = _semdedup_k_for(_corpus_rows(spark, sf_dir, "embeddings"))
+    k = _semdedup_k_for(plan_rows(e))
     model = _embeddings_codebook2(spark, sf_dir, k=k)
     assigned = model.assign(e, "vec_id", "embedding")
     order_key = dedup.token_hash(
@@ -3489,7 +3460,7 @@ def incremental_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fixed-knob original: 73.7 s / 35 GB spill at x100; derived+packed:
     18.1 s / zero spill / 102 MB shuffle."""
     d = spread(T(spark, sf_dir, "documents"))
-    bits = _hamming_bits_for(_corpus_rows(spark, sf_dir, "documents"))
+    bits = _hamming_bits_for(plan_rows(d))
     batch = d.filter(F.col("doc_id") % 10 == 7)
     index = d.filter(F.col("doc_id") % 10 != 7)
     return dedup.simhash_lookup_pairs(
@@ -3570,7 +3541,6 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = d.filter(F.col("doc_id") % 10 != 7)
     return dedup.minhash_lookup_pairs(
         batch, index, "doc_id", "text", n=3, num_hashes=32, bands=16, threshold=0.5,
-        index_rows=_corpus_rows(spark, sf_dir, "documents"),
     )
 
 
@@ -4179,7 +4149,6 @@ def curation_refresh_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         staged.filter(F.col("in_a")).select("doc_id", "text"),
         "doc_id", "text",
         n=3, num_hashes=32, bands=16, threshold=0.5,
-        index_rows=_corpus_rows(spark, sf_dir, "documents"),
     )
     # pins the whole lookup to one execution
     unique_ids = pin(looked.filter(F.col("is_unique")).select(F.col("id").alias("doc_id")))

@@ -22,6 +22,7 @@ from pyspark.sql.types import (
 )
 
 from ..scope import QueryScope, scratch, set_conf
+from ..sources.layout import plan_nodes, plan_rows
 
 #: Schema of the synthetic `events` table as a stream (file sources
 #: require an explicit schema — no runtime inference on unbounded input).
@@ -120,20 +121,6 @@ TIMEOUT_SECONDS = 600
 STATE_TARGET_ROWS_PER_PARTITION = 50_000
 
 
-def parquet_num_rows(sf_dir: str, table: str) -> int:
-    """Row count of a parquet table from FOOTER metadata — zero Spark
-    jobs, so deriving a partitioning knob from it is free. Handles both
-    a single file (driver testdata) and a directory of part files (the
-    generated scale trees)."""
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    p = Path(sf_dir) / f"{table}.parquet"
-    files = sorted(p.glob("*.parquet")) if p.is_dir() else [p]
-    return sum(pq.ParquetFile(str(f)).metadata.num_rows for f in files)
-
-
 def state_partitions_for(input_rows: int, default: int) -> int:
     """Corpus-derived state-partition count for a bounded (availableNow)
     stream run: enough partitions that each absorbs
@@ -156,25 +143,6 @@ class StreamSettings(NamedTuple):
     input_rows: int | None
 
 
-def _footer_rows(path: str, glob: str | None) -> int | None:
-    """Rows of the parquet files directly under the directory ``path``
-    whose names match ``glob`` (a file source's ``pathGlobFilter``), from
-    their footers. Names starting with ``_`` or ``.`` are skipped, as
-    Spark skips them (``_SUCCESS``, ``.crc``). None when ``path`` is not
-    a local directory."""
-    from pathlib import Path
-
-    import pyarrow.parquet as pq
-
-    if not Path(path).is_dir():
-        return None
-    return sum(
-        pq.ParquetFile(str(f)).metadata.num_rows
-        for f in Path(path).glob(glob or "*")
-        if f.is_file() and not f.name.startswith(("_", "."))
-    )
-
-
 def stream_settings(df: DataFrame, output_mode: str) -> StreamSettings:
     """The runner's settings for the stream ``df``, read in one walk of
     its analyzed plan (zero jobs).
@@ -193,25 +161,17 @@ def stream_settings(df: DataFrame, output_mode: str) -> StreamSettings:
     ``availableNow`` unless its no-data batches are dropped; a plan that
     has one AND needs its no-data batches raises ``ValueError``.
 
-    ``input_rows``: the rows the plan's parquet file-source leaves read,
-    summed from parquet footers over the DISTINCT (``path``,
-    ``pathGlobFilter``) pairs of their options — the interval joins read
-    ``events`` twice and count it once. None when the plan has no
-    parquet file leaf (the pyds chapter stream, a rate source) or one
-    whose path is not a local directory."""
-    nodes = [df._jdf.queryExecution().analyzed()]
-    for node in nodes:  # grows while iterated: walks the whole tree
-        kids = node.children()
-        nodes.extend(kids.apply(i) for i in range(kids.size()))
+    ``input_rows``: ``sources.layout.plan_rows(df)``, the rows of the
+    files the stream's parquet file-source leaves read, from their
+    footers — the interval joins read ``events`` twice and count it
+    once, and the static side of a stream-static join does not count.
+    None when the plan has no parquet file leaf (the pyds chapter
+    stream, a rate source) or one whose path is not a local
+    directory."""
     keep = processing_timeout = False
-    leaves: set[tuple[str, str | None]] = set()
-    for node in (n for n in nodes if n.isStreaming()):
+    for node in (n for n in plan_nodes(df) if n.isStreaming()):
         name = node.getClass().getSimpleName()
-        if name == "StreamingRelation" and node.dataSource().className() == "parquet":
-            opts = node.dataSource().options()
-            glob = opts.apply("pathGlobFilter") if opts.contains("pathGlobFilter") else None
-            leaves.add((opts.apply("path"), glob))
-        elif name.startswith("TransformWithState"):
+        if name.startswith("TransformWithState"):
             keep = True
         elif name.endswith("WithState"):
             timeout = node.timeout().toString()
@@ -223,8 +183,7 @@ def stream_settings(df: DataFrame, output_mode: str) -> StreamSettings:
             keep |= node.joinType().toString() != "Inner"
     if keep and processing_timeout:
         raise ValueError("processing-time timeout + no-data batches: would never finish")
-    rows = [_footer_rows(path, glob) for path, glob in leaves]
-    return StreamSettings(keep, sum(rows) if rows and None not in rows else None)
+    return StreamSettings(keep, plan_rows(df))
 
 
 def run_available_now_to_parquet(df: DataFrame, output_mode: str, query_name: str) -> DataFrame:
@@ -236,9 +195,9 @@ def run_available_now_to_parquet(df: DataFrame, output_mode: str, query_name: st
     works out the rest itself, from one walk of the analyzed plan
     (``stream_settings``, zero jobs) and fixed choices:
 
-    - state partitions: ``state_partitions_for`` of the rows the plan's
-      parquet leaves read, per their footers; no override when the plan
-      has no parquet file leaf;
+    - state partitions: ``state_partitions_for`` of the stream's
+      ``plan_rows`` (the parquet footers of the files its file-source
+      leaves read); no override when the plan has no parquet file leaf;
     - the trailing no-data micro-batch: run only where it can emit a row
       (below);
     - the state store: RocksDB (``ROCKSDB_PROVIDER``);

@@ -322,18 +322,20 @@ class TestPlanHash:
         )
 
     def test_stable_across_checkout_and_hash_seed(self, tmp_path):
-        """A copy of the package imported from another directory, under
-        another PYTHONHASHSEED, gives the same 148 fingerprints."""
+        """One snapshot of the package, imported from two directories
+        under two PYTHONHASHSEEDs in fresh processes, gives the same 148
+        fingerprints. Both sides come from the snapshot, so an edit to a
+        package file while the suite runs cannot reach either."""
         import os
         import shutil
         import subprocess
 
-        from hebrew_tutor_data_pipeline_spark.plans import fingerprint, plan_hash
-
         repo = Path(__file__).resolve().parent.parent
+        first, second = tmp_path / "a", tmp_path / "b"
         for part in ("hebrew_tutor_data_pipeline_spark", "tests/fixtures"):
-            shutil.copytree(repo / part, tmp_path / part,
+            shutil.copytree(repo / part, first / part,
                             ignore=shutil.ignore_patterns("__pycache__"))
+        shutil.copytree(first, second)
         # no catalog plan reaches a set of strings, so a probe does
         probe = "def probe(x):\n    return x in {'alpha', 'beta', 'gamma', 'delta'}\n"
         code = (
@@ -344,21 +346,20 @@ class TestPlanHash:
             "fps = {n: plans.fingerprint(s) for n, s in plans.CATALOG.items()};"
             "print(json.dumps([fps, plans.plan_hash(ns['probe'])]))"
         )
-        seed = "8" if os.environ.get("PYTHONHASHSEED") == "7" else "7"
         env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-        out = subprocess.run(
-            [sys.executable, "-c", code, str(tmp_path)], cwd=tmp_path,
-            env={**env, "PYTHONHASHSEED": seed},
-            capture_output=True, text=True, check=True,
-        ).stdout
-        theirs, their_probe = json.loads(out.splitlines()[-1])
-        cache: dict = {}
-        ours = {n: fingerprint(s, cache) for n, s in CATALOG.items()}
-        assert len(theirs) == 148
-        assert theirs == ours
-        ns = {"__name__": "probe"}
-        exec(compile(probe, "<string>", "exec", dont_inherit=True), ns)
-        assert their_probe == plan_hash(ns["probe"])
+
+        def fingerprints(root: Path, seed: str) -> list:
+            out = subprocess.run(
+                [sys.executable, "-c", code, str(root)], cwd=root,
+                env={**env, "PYTHONHASHSEED": seed},
+                capture_output=True, text=True, check=True,
+            ).stdout
+            return json.loads(out.splitlines()[-1])
+
+        (fps_a, probe_a), (fps_b, probe_b) = fingerprints(first, "7"), fingerprints(second, "8")
+        assert len(fps_a) == 148
+        assert fps_a == fps_b
+        assert probe_a == probe_b
 
 
 def test_entry_smoke(spark):

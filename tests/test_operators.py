@@ -1579,24 +1579,24 @@ class TestMinhashLookup:
         ).first()
         assert (r["match_id"], r["jaccard"], r["is_unique"]) == (5, 1.0, False)
 
-    def test_semijoin_verify_path_is_value_identical(self, spark):
-        """index_rows ≥ 100k flips the verification shingles onto the
-        shingle-after-semi-join path (r14, guide §3.3) — the output
-        must be row-identical to the plain two-pass form, including
-        unmatched batch docs (is_unique=True restores), on the same
-        inputs."""
-        from hebrew_tutor_data_pipeline_spark.operators.dedup import (
-            minhash_lookup_pairs,
-        )
+    def test_semijoin_verify_path_is_value_identical(self, spark, tmp_path, monkeypatch):
+        """An index whose files hold SEMIJOIN_MIN_INDEX_ROWS rows or more
+        flips the verification shingles onto the pinned
+        shingle-after-semi-join path (r14, guide §3.3) — the output must
+        be row-identical to the plain two-pass form, including unmatched
+        batch docs (is_unique=True restores), on the same inputs."""
+        from hebrew_tutor_data_pipeline_spark.operators import dedup
+        from hebrew_tutor_data_pipeline_spark.scope import QueryScope
 
-        index = spark.createDataFrame(
+        spark.createDataFrame(
             [
                 (1, "the quick brown fox jumps over the lazy dog"),
                 (2, "pack my box with five dozen liquor jugs"),
                 (3, "the quick brown fox jumps over the lazy cat"),
             ],
             ["doc_id", "text"],
-        )
+        ).write.parquet(str(tmp_path / "index"))
+        index = spark.read.parquet(str(tmp_path / "index"))
         batch = spark.createDataFrame(
             [
                 (100, "the quick brown fox jumps over the lazy dog"),
@@ -1604,17 +1604,25 @@ class TestMinhashLookup:
             ],
             ["doc_id", "text"],
         )
-        plain = sorted(
-            map(tuple, minhash_lookup_pairs(batch, index, "doc_id", "text").collect())
-        )
-        semi = sorted(
-            map(
-                tuple,
-                minhash_lookup_pairs(
-                    batch, index, "doc_id", "text", index_rows=10**9
-                ).collect(),
-            )
-        )
+        pinned: list = []
+        real_pin = dedup.pin
+
+        def recording_pin(df, *args, **kwargs):
+            pinned.append(df)
+            return real_pin(df, *args, **kwargs)
+
+        monkeypatch.setattr(dedup, "pin", recording_pin)
+
+        def lookup() -> list:
+            with QueryScope(spark):
+                rows = dedup.minhash_lookup_pairs(batch, index, "doc_id", "text").collect()
+            return sorted(map(tuple, rows))
+
+        plain = lookup()
+        assert pinned == []
+        monkeypatch.setattr(dedup, "SEMIJOIN_MIN_INDEX_ROWS", 3)
+        semi = lookup()
+        assert len(pinned) == 1
         assert plain == semi
 
 

@@ -770,7 +770,7 @@ class TestNoDataBatchGate:
         # every events stream sizes its state partitions from the events
         # table (counted once in the self-joins); the pyds stream has no
         # parquet leaf and gets no override
-        events = sources.parquet_num_rows(SF, "events")
+        events = load_table(spark, SF, "events").count()
         assert {q: st.input_rows for q, st in seen.items()} == {
             q: None if q == "chapter_source_pyds_stream" else events for q in seen
         }
@@ -946,10 +946,11 @@ class TestScratchSweep:
 
 
 class TestStatePartitionKnob:
-    """state_partitions_for / parquet_num_rows: the bounded-run state
-    sizing knob (r13). shuffle partitions == state-store instances, and
-    each instance pays open+commit+checkpoint per microbatch — measured
-    ~2x on ~100k-row inputs at 32 vs 4 (bench_runs/README.md Round 13)."""
+    """state_partitions_for / plan_rows: the bounded-run state sizing
+    knob (r13) and the one row statistic it reads. shuffle partitions ==
+    state-store instances, and each instance pays
+    open+commit+checkpoint per microbatch — measured ~2x on ~100k-row
+    inputs at 32 vs 4 (bench_runs/README.md Round 13)."""
 
     def test_state_partitions_for_shape(self):
         from hebrew_tutor_data_pipeline_spark.streaming.sources import (
@@ -964,15 +965,11 @@ class TestStatePartitionKnob:
         assert state_partitions_for(10_000_000, 4) == 4
         assert state_partitions_for(0, 2) == 2
 
-    def test_parquet_num_rows_matches_spark(self, spark):
-        from hebrew_tutor_data_pipeline_spark.sources.readers import load_table
-        from hebrew_tutor_data_pipeline_spark.streaming.sources import (
-            parquet_num_rows,
-        )
+    def test_plan_rows_matches_spark(self, spark):
+        from hebrew_tutor_data_pipeline_spark.sources.layout import plan_rows
 
-        sf_dir = "/root/testdata/sf0.001"
-        n = parquet_num_rows(sf_dir, "events")
-        assert n == load_table(spark, sf_dir, "events").count()
+        events = load_table(spark, "/root/testdata/sf0.001", "events")
+        assert plan_rows(events) == events.count()
 
     def test_input_rows_read_from_the_plan_on_both_layouts(self, spark, tmp_path):
         """The runner's input-row count comes from the footers of the
@@ -981,13 +978,13 @@ class TestStatePartitionKnob:
         count the same rows, and a self-join counts its table once."""
         import pyarrow.parquet as pq
 
+        from hebrew_tutor_data_pipeline_spark.sources.layout import plan_rows
         from hebrew_tutor_data_pipeline_spark.streaming.sources import (
             events_parquet_stream,
-            parquet_num_rows,
             stream_settings,
         )
 
-        n = parquet_num_rows(SF, "events")
+        n = load_table(spark, SF, "events").count()
         flat = events_parquet_stream(spark, SF)
         assert stream_settings(flat, "append").input_rows == n
         self_join = flat.alias("a").join(
@@ -1003,8 +1000,52 @@ class TestStatePartitionKnob:
             pq.write_table(table.slice(lo, hi - lo), parts / f"part-{i}.parquet")
         (parts / "_SUCCESS").write_text("")
         stream = events_parquet_stream(spark, str(tmp_path))
-        assert parquet_num_rows(str(tmp_path), "events") == n
+        assert plan_rows(load_table(spark, str(tmp_path), "events")) == n
         assert stream_settings(stream, "append").input_rows == n
+
+    def test_frame_derived_from_a_pinned_frame_counts_its_table(self, spark):
+        """The optimized plan of a frame filtered from a persisted one
+        reads the cache (``inputFiles()`` is empty); the analyzed plan
+        still names the table. A self-join counts it once, and a static
+        side counts for a batch join but not for a stream-static one."""
+        from hebrew_tutor_data_pipeline_spark.scope import QueryScope, pin
+        from hebrew_tutor_data_pipeline_spark.sources.layout import plan_rows
+        from hebrew_tutor_data_pipeline_spark.streaming.sources import (
+            events_parquet_stream,
+        )
+
+        events = load_table(spark, SF, "events")
+        n = events.count()
+        with QueryScope(spark):
+            slice_ = pin(events).filter(F.col("event_id") % 10 != 7)
+            assert slice_.inputFiles() == []
+            assert plan_rows(slice_) == n
+            assert plan_rows(slice_.alias("a").join(slice_.alias("b"), "event_id")) == n
+        customer = load_table(spark, SF, "customer")
+        enriched = events_parquet_stream(spark, SF).join(
+            customer, F.col("user_id") == F.col("c_custkey")
+        )
+        assert plan_rows(enriched) == n
+        assert plan_rows(events.join(customer, F.col("user_id") == F.col("c_custkey"))) == (
+            n + customer.count()
+        )
+
+    def test_frames_without_a_file_leaf_give_none(self, spark):
+        from hebrew_tutor_data_pipeline_spark.plans.catalog_hebrew import (
+            FIXTURE_AUDIO_TREE,
+        )
+        from hebrew_tutor_data_pipeline_spark.sources.layout import plan_rows
+        from hebrew_tutor_data_pipeline_spark.sources.pyds import register_chapter_source
+
+        assert plan_rows(spark.createDataFrame([(1, "a")], "id long, s string")) is None
+        register_chapter_source(spark)
+        chapters = (
+            spark.readStream.format("hebrew_chapters")
+            .option("root", FIXTURE_AUDIO_TREE)
+            .option("max_chapter", 4)
+            .load()
+        )
+        assert plan_rows(chapters) is None
 
     def test_knob_restores_session_conf(self, spark, tmp_path):
         """The derived state-partition override (4, from a 10-row input

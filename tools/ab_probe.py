@@ -11,13 +11,16 @@ MEDIAN of ≥3 fresh-session trials, and a speed-up is only claimed when
 all three signals agree — median wall, median jobs and median executor
 CPU — and the wall medians separate beyond the trial spread.
 
-Usage: python tools/ab_probe.py <query> [trials=3] [cpus=32]
+The child sizes its session from the environment it inherits
+(`SPARK_GRAFT_CPUS` if set, else the usable cores); the core count
+printed is the record's sidecar `cpus`.
+
+Usage: python tools/ab_probe.py <query> [trials=3]
 """
 
 from __future__ import annotations
 
 import json
-import os
 import statistics
 import subprocess
 import sys
@@ -26,13 +29,12 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 
-def trial(name: str, cpus: int) -> dict:
-    """The entry's record from one fresh `python bench.py <name>`."""
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
+def trial(name: str) -> tuple[dict, int]:
+    """The entry's record and the sidecar's core count from one fresh
+    `python bench.py <name>`."""
     r = subprocess.run(
         [sys.executable, str(REPO / "bench.py"), name],
         cwd=REPO,
-        env=env,
         capture_output=True,
         text=True,
         timeout=1200,
@@ -42,16 +44,15 @@ def trial(name: str, cpus: int) -> dict:
     doc = json.loads((REPO / "bench_runs" / "BENCH_last.json").read_text())
     if doc.get("errors"):
         raise RuntimeError(f"query errored: {doc['errors']}")
-    return doc["records"][name]
+    return doc["records"][name], doc["cpus"]
 
 
 def main() -> int:
     name = sys.argv[1]
     trials = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    cpus = int(sys.argv[3]) if len(sys.argv) > 3 else 32
     recs = []
     for i in range(trials):
-        rec = trial(name, cpus)
+        rec, cpus = trial(name)
         recs.append(rec)
         print(
             f"trial {i + 1}: {rec['wall_s']:.3f}s, {rec['jobs']} jobs, "

@@ -32,10 +32,9 @@ from hebrew_tutor_data_pipeline_spark.metrics import event_log_conf, fold, run_e
 from hebrew_tutor_data_pipeline_spark.plans import CATALOG  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.scope import clear_memo  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.session import get_spark  # noqa: E402
+from hebrew_tutor_data_pipeline_spark.sources.layout import plan_rows  # noqa: E402
+from hebrew_tutor_data_pipeline_spark.sources.readers import load_table  # noqa: E402
 from hebrew_tutor_data_pipeline_spark.streaming.progress import ProgressListener  # noqa: E402
-from hebrew_tutor_data_pipeline_spark.streaming.sources import (  # noqa: E402
-    parquet_num_rows,
-)
 
 HEAVY = (
     # jaccard_token_pairs (the exhaustive truth arm) is deliberately
@@ -114,11 +113,11 @@ def main() -> int:
         spark.range(1_000_000).selectExpr("sum(id)").collect()
         for d in dirs:
             label = Path(d).name
-            report["dirs"][label] = {"path": d, "n_docs": parquet_num_rows(d, "documents")}
-            try:
-                report["dirs"][label]["n_events"] = parquet_num_rows(d, "events")
-            except OSError:  # events are optional in a tree
-                pass
+            report["dirs"][label] = {
+                "path": d, "n_docs": plan_rows(load_table(spark, d, "documents"))
+            }
+            if Path(d, "events.parquet").exists():  # events are optional in a tree
+                report["dirs"][label]["n_events"] = plan_rows(load_table(spark, d, "events"))
             for name in (n for n in queries if n in CATALOG):
                 rec = run_entry(spark, name, d, listener)
                 # each query pays its FULL model cost (codebook training
